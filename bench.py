@@ -439,6 +439,9 @@ def materialize(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    # exported, so the session sizes its shuffle partitions from this
+    # data, as it does when the caller sets the variable
+    os.environ["SPARK_GRAFT_SF_DIR"] = sf_dir
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     registry = load_registry()
     spark = get_spark("csb-bench")

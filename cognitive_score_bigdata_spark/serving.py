@@ -16,6 +16,8 @@ from typing import Any
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from cognitive_score_bigdata_spark.streaming.pipeline import state_bucket
+
 CRITICAL_THRESHOLD = 50
 
 
@@ -79,6 +81,31 @@ def dashboard_stats(
     }
 
 
+def status_lookup(wearables: DataFrame, user_id: str) -> DataFrame:
+    """The S8 point-read behind :func:`worker_status`: the user's most
+    recent snapshot as a top-1 by event time (TakeOrderedAndProject —
+    never a global sort).
+
+    Over the latest-state table (partitioned by ``bucket``) the lookup
+    also filters on the key's bucket, which Spark folds to a literal
+    partition filter, so the scan opens one bucket's files — the
+    reference's DynamoDB ``query`` likewise touches only the key's
+    partition. Frames without a ``bucket`` column are filtered on
+    ``user_id`` alone.
+    """
+    pred = F.col("user_id") == user_id
+    if "bucket" in wearables.columns:
+        pred = pred & (F.col("bucket") == state_bucket(F.lit(user_id)))
+    # heart_rate/steps break timestamp ties deterministically (the
+    # DynamoDB reference never faces ties — its sort key is unique;
+    # repeated calls here must return a stable row regardless)
+    return (
+        wearables.filter(pred)
+        .orderBy(F.desc("timestamp"), F.desc("heart_rate"), F.desc("steps"))
+        .limit(1)
+    )
+
+
 def worker_status(wearables: DataFrame, user_id: str) -> dict[str, Any]:
     """GET ``/api/worker/{user_id}/status`` — the "Last Pulse" payload
     (reference ``src/backend/main.py:73-81`` over the DynamoDB helper at
@@ -86,20 +113,10 @@ def worker_status(wearables: DataFrame, user_id: str) -> dict[str, Any]:
     int-cast at the edge, with the no-data-yet default row (heart rate /
     steps 0, timestamp None) rather than a 404.
 
-    The scan side is the S8 point-read: an equality predicate on the
-    partition/key column (pushes to the store) + top-1 by event time
-    (TakeOrderedAndProject — never a global sort). Only one row crosses
-    to the driver.
+    The scan side is the S8 point-read, see :func:`status_lookup`. Only
+    one row crosses to the driver.
     """
-    # heart_rate/steps break timestamp ties deterministically (the
-    # DynamoDB reference never faces ties — its sort key is unique;
-    # repeated calls here must return a stable row regardless)
-    row = (
-        wearables.filter(F.col("user_id") == user_id)
-        .orderBy(F.desc("timestamp"), F.desc("heart_rate"), F.desc("steps"))
-        .limit(1)
-        .collect()
-    )
+    row = status_lookup(wearables, user_id).collect()
     if not row:
         return {
             "user_id": user_id,

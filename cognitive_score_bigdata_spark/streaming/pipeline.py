@@ -23,11 +23,13 @@ caveat), each exercised by tests:
   ("Key format: raw/YYYY-MM-DD/...", ``ingestion.py:32-33``) but writes
   flat; we actually partition by ingest_date so cold-path scans prune.
 
-Scale posture: the latest-state table is parquet partitioned by a stable
-hash bucket of ``user_id`` with dynamic partition overwrite — a micro-
-batch only rewrites buckets it touches (~touched_users/total fraction of
-the table) instead of the whole table; bucket count is a knob
-(64 here, thousands at 100 TB).
+Scale posture: the latest-state table is parquet partitioned by
+:func:`state_bucket`, a stable hash bucket of ``user_id``, with dynamic
+partition overwrite — a micro-batch reads and rewrites only the buckets
+it touches (~touched_users/total fraction of the table) instead of the
+whole table, one file per bucket. Readers prune by the same function: a
+keyed lookup adds ``bucket == state_bucket(lit(user_id))`` and scans one
+bucket. Bucket count is a knob (64 here, thousands at 100 TB).
 """
 
 from __future__ import annotations
@@ -131,8 +133,10 @@ def route(df: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-def _bucket(col) -> F.Column:
-    """Stable state-table bucket: non-negative hash of the key."""
+def state_bucket(col) -> F.Column:
+    """Stable state-table bucket of a ``user_id`` column or literal: the
+    non-negative hash of the key. The writer partitions by it and keyed
+    readers prune by it, so both must call this one function."""
     return F.pmod(F.xxhash64(col), F.lit(N_STATE_BUCKETS)).cast("int")
 
 
@@ -146,6 +150,10 @@ def upsert_latest_state(
     for KV fidelity (stream_processor.py:37-39), dynamic partition
     overwrite so only touched hash buckets rewrite. Overwriting a
     partition is idempotent per epoch → exactly-once effect on replays.
+
+    The merge scans only the touched buckets of the existing table, and
+    its one shuffle is on ``bucket``, so each bucket is aggregated and
+    written by one task: one file per bucket.
     """
     snap_cols = [
         F.col("user_id"),
@@ -158,6 +166,7 @@ def upsert_latest_state(
         batch.filter(F.col("user_id").isNotNull())  # P3 (stream_processor.py:28-30)
         .filter(F.col("schema") == "tracking_v1")
         .select(*snap_cols)
+        .withColumn("bucket", state_bucket(F.col("user_id")))
     )
     if fresh.isEmpty():
         return
@@ -167,22 +176,24 @@ def upsert_latest_state(
     except Exception:  # first batch: no table yet
         existing = None
 
-    touched = fresh.select("user_id").distinct()
     if existing is not None:
-        prior = existing.join(F.broadcast(touched), "user_id", "inner").select(
-            "user_id", "ts", "heart_rate", "steps", "calories"
-        )
-        fresh = fresh.unionByName(prior)
+        # Dynamic overwrite replaces each touched bucket whole, so every
+        # stored row of those buckets joins the merge, not only the
+        # touched users' rows. The buckets go in as a literal partition
+        # filter because Spark drops dynamic pruning at run time when
+        # the batch is cached, and foreachBatch caches it.
+        buckets = [r["bucket"] for r in fresh.select("bucket").distinct().collect()]
+        fresh = fresh.unionByName(existing.filter(F.col("bucket").isin(buckets)))
 
     merged = (
-        fresh.groupBy("user_id")
+        fresh.repartition("bucket")
+        .groupBy("bucket", "user_id")
         .agg(
             F.max_by(
                 F.struct("ts", "heart_rate", "steps", "calories"), F.col("ts")
             ).alias("s")
         )
-        .select("user_id", "s.ts", "s.heart_rate", "s.steps", "s.calories")
-        .withColumn("bucket", _bucket(F.col("user_id")))
+        .select("user_id", "s.ts", "s.heart_rate", "s.steps", "s.calories", "bucket")
     )
 
     writer = merged.write.mode("overwrite").partitionBy("bucket")

@@ -65,8 +65,13 @@ def _emit_transitions(
         prev, nxt = np.concatenate(([prev0], types[:-1])), types
     else:
         prev, nxt = types[:-1], types[1:]
-    last_i = order[-1]
-    cand = (int(ts[last_i]), int(eid[last_i]), str(types[-1]))
+    last_i, last_type = order[-1], types[-1]
+    # a null last event_type is stored as a real null, never "None"
+    cand = (
+        int(ts[last_i]),
+        int(eid[last_i]),
+        None if pd.isna(last_type) else str(last_type),
+    )
     # Monotone state: a batch wholly OLDER than the stored last event
     # (late arrival across batches) must not regress the carried state —
     # the documented cross-batch reorder limit applies to the EMISSION

@@ -53,3 +53,34 @@ def test_materialize_runs_every_output_column(spark):
     df = _with_counted_python_stage(spark, spark.range(257), acc)
     materialize(df)
     assert acc.value == 257, acc.value
+
+
+def test_bare_bench_exports_sf_dir_before_the_session(monkeypatch):
+    """A plain ``python bench.py`` must size shuffle partitions from the
+    default dataset, as a caller-set SPARK_GRAFT_SF_DIR does: the
+    default is exported before ``get_spark`` builds the session.
+    Spark-free: the session factory is stubbed and stops ``main``."""
+    import os
+
+    import bench
+
+    class _Stop(Exception):
+        pass
+
+    seen = {}
+
+    def fake_get_spark(*_a, **_k):
+        seen["sf_dir"] = os.environ.get("SPARK_GRAFT_SF_DIR")
+        raise _Stop
+
+    # setenv first so monkeypatch restores the variable's absence
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "unset")
+    monkeypatch.delenv("SPARK_GRAFT_SF_DIR")
+    monkeypatch.setattr(bench, "load_registry", dict)
+    monkeypatch.setattr(bench, "get_spark", fake_get_spark)
+    try:
+        bench.main()
+    except _Stop:
+        pass
+    # the default dataset is the sf0.1 scale
+    assert (seen.get("sf_dir") or "").endswith("sf0.1")

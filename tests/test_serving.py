@@ -209,6 +209,54 @@ def test_worker_status_timestamp_tie_is_deterministic(spark):
         assert got["last_heart_rate"] == 90 and got["last_steps"] == 900
 
 
+def test_worker_status_prunes_to_the_users_bucket(spark, tmp_path):
+    """Over the bucketed latest-state table the lookup scans only the
+    user's bucket, and returns the same payload as over the same rows
+    without the ``bucket`` column: for a present user, a user with null
+    readings and a missing user."""
+    import re
+
+    import pyspark.sql.functions as F
+
+    from cognitive_score_bigdata_spark.serving import status_lookup, worker_status
+    from cognitive_score_bigdata_spark.streaming.pipeline import (
+        state_bucket,
+        upsert_latest_state,
+    )
+
+    ts = datetime.datetime(2024, 1, 1, 12, 0, 0)
+    batch = spark.createDataFrame(
+        [
+            ("u1", "tracking_v1", ts, 61, 1000, 5),
+            ("u1", "tracking_v1", ts.replace(hour=14), 72, 4300, 6),
+            ("u2", "tracking_v1", ts, None, None, None),
+        ]
+        + [(f"u{i}", "tracking_v1", ts, 60 + i, i, 1) for i in range(3, 20)],
+        "user_id string, schema string, ts timestamp, heart_rate int, "
+        "steps int, calories int",
+    )
+    state_dir = str(tmp_path / "state")
+    upsert_latest_state(spark, batch, state_dir)
+    wearables = spark.read.parquet(state_dir).withColumnRenamed("ts", "timestamp")
+
+    for uid in ("u1", "u2", "nobody"):
+        assert worker_status(wearables, uid) == worker_status(
+            wearables.drop("bucket"), uid
+        ), uid
+    assert worker_status(wearables, "u1") == {
+        "user_id": "u1",
+        "last_heart_rate": 72,
+        "last_steps": 4300,
+        "timestamp": "2024-01-01 14:00:00",
+    }
+    assert worker_status(wearables, "u2")["last_heart_rate"] == 0
+
+    bucket = spark.range(1).select(state_bucket(F.lit("u1"))).first()[0]
+    plan = status_lookup(wearables, "u1")._jdf.queryExecution().executedPlan().toString()
+    (scan,) = [line for line in plan.splitlines() if "FileScan parquet" in line]
+    assert re.search(rf"PartitionFilters: \[[^\]]*\(bucket#\d+ = {bucket}\)", scan), scan
+
+
 def test_session_scoped_cache_evicts_stale_appids():
     """session_cache.session_scoped keys by applicationId (id(spark) can
     be recycled by the allocator) and drops other-session entries on

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -15,6 +16,7 @@ from cognitive_score_bigdata_spark.streaming.pipeline import (
     enrich,
     route,
     run_ingest_pipeline,
+    state_bucket,
     upsert_latest_state,
     write_raw_batch,
 )
@@ -144,6 +146,98 @@ def test_upsert_idempotent_replay(spark, dirs):
     upsert_latest_state(spark, batch, dirs["state"])  # replay
     second = sorted(map(str, spark.read.parquet(dirs["state"]).collect()))
     assert first == second
+
+
+def _tracking_batch(spark, events):
+    return enrich(spark.createDataFrame(events, schema=EVENT_SCHEMA))
+
+
+def _buckets_of(spark, users):
+    """Each user's bucket as a keyed reader computes it (from a literal)."""
+    row = spark.range(1).select(
+        *[state_bucket(F.lit(u)).alias(u) for u in users]
+    ).first()
+    return row.asDict()
+
+
+def _files_per_bucket(state_dir):
+    return {
+        d: len([f for f in os.listdir(os.path.join(state_dir, d)) if f.endswith(".parquet")])
+        for d in os.listdir(state_dir)
+        if d.startswith("bucket=")
+    }
+
+
+def test_state_table_bucket_layout(spark, dirs):
+    """Every stored row sits in the bucket a reader computes for its key,
+    and each bucket directory holds one file, after the first write and
+    after a merge that rewrites some buckets. Partition coalescing is off
+    so the write runs in several tasks, as it does on real batch sizes."""
+    users = [f"user-{i}" for i in range(200)]
+    want = _buckets_of(spark, users)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        upsert_latest_state(
+            spark,
+            _tracking_batch(spark, [_tracking(u, BASE_TS + i, hr=60 + i) for i, u in enumerate(users)]),
+            dirs["state"],
+        )
+        layout = _files_per_bucket(dirs["state"])
+        assert len(layout) == len(set(want.values()))
+        assert set(layout.values()) == {1}
+
+        upsert_latest_state(
+            spark,
+            _tracking_batch(spark, [_tracking(u, BASE_TS + 1000, hr=99) for u in users[:5]]),
+            dirs["state"],
+        )
+        assert set(_files_per_bucket(dirs["state"]).values()) == {1}
+    finally:
+        spark.conf.set(key, saved)
+    rows = spark.read.parquet(dirs["state"]).collect()
+    assert {r["user_id"]: r["bucket"] for r in rows} == want
+    assert sorted(float(r["heart_rate"]) for r in rows if r["user_id"] in users[:5]) == [99.0] * 5
+
+
+def test_upsert_merge_scans_only_touched_buckets(spark, dirs, monkeypatch):
+    """The second upsert reads the existing table through a partition
+    filter on the touched buckets, not the whole table. The batch is
+    cached, as foreachBatch caches it."""
+    from pyspark.sql import DataFrameWriter
+
+    users = [f"user-{i}" for i in range(24)]
+    upsert_latest_state(
+        spark,
+        _tracking_batch(spark, [_tracking(u, BASE_TS + i, hr=60 + i) for i, u in enumerate(users)]),
+        dirs["state"],
+    )
+    buckets = _buckets_of(spark, users)
+    touched = [users[0]] + [u for u in users if buckets[u] != buckets[users[0]]][:1]
+
+    plans = []
+    write_parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return write_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    batch = _tracking_batch(spark, [_tracking(u, BASE_TS + 100, hr=99) for u in touched])
+    batch.persist()
+    try:
+        upsert_latest_state(spark, batch, dirs["state"])
+    finally:
+        batch.unpersist()
+
+    (scan,) = [line for line in plans[0].splitlines() if "FileScan parquet" in line]
+    pruned = re.search(r"PartitionFilters: \[bucket#\d+ IN \(([\d,]+)\)", scan)
+    assert pruned, scan
+    assert {int(b) for b in pruned.group(1).split(",")} == {buckets[u] for u in touched}
+    state = {r["user_id"]: r for r in spark.read.parquet(dirs["state"]).collect()}
+    assert set(state) == set(users)
+    assert [float(state[u]["heart_rate"]) for u in touched] == [99.0, 99.0]
 
 
 def test_raw_batch_idempotent_replay(spark, dirs):

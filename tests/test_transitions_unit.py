@@ -114,6 +114,18 @@ def test_all_null_prev_after_mask_emits_nothing():
     assert st.get == (10, 1, "a")
 
 
+def test_null_last_event_carries_a_null_not_the_string_none():
+    # a batch that ends with a null event_type stores a real null, so
+    # the next batch emits no transition out of a fake "None" type
+    st = _FakeState()
+    out = _run([_pdf([(7, "a", 10, 1), (7, None, 20, 1)])], st)
+    assert list(zip(out["prev_type"], out["next_type"])) == [("a", None)]
+    assert st.get == (20, 1, None)
+    out = _run([_pdf([(7, "b", 30, 1), (7, "c", 40, 1)])], st)
+    assert list(zip(out["prev_type"], out["next_type"])) == [("b", "c")]
+    assert st.get == (40, 1, "c")
+
+
 def test_all_empty_frames_is_a_noop():
     st = _FakeState((1, 1, "a"))
     out = _run([_pdf([]).astype({"ts_us": "int64", "event_id": "int64"})], st)
