@@ -17,8 +17,11 @@ check for those.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from dataclasses import dataclass
+import json
+import re
+from collections.abc import Callable, Iterable
+from dataclasses import dataclass, replace
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -46,1157 +49,45 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return wrap
 
 
-# The driver's correctness harness checks the FIRST 50 registry entries
-# per round; this explicit list IS the round-6 window. Composition per
-# the round-5 rotation plan: the 4 round-5 staged rows first (the only
-# registry queries without a driver CORRECTNESS row — after this window
-# the never-checked count is 0 again), then ALL 11 queries whose latest
-# driver row is round 1 (the 5 hash-green rows round 5 dropped —
-# agg_median, window_percentiles, scalar_regexp_replace, agg_rollup,
-# agg_cube — plus the 6 rows-only r1 entries, 5-round-stale), then 22
-# of the 47 queries whose latest row is round 2. The 25 r2 rows carried
-# to round 7 each have a same-module sibling IN this window or a
-# stronger sibling verified r4/r5 on identical machinery:
-# window_ntile/nth_lag_default/rolling_avg/sliding_10m_5m (module pinned
-# here by rank/session/topk), scalar_base64/conditional/
-# datetime (scalar_json + scalar_string_funcs here;
-# string_advanced/interval green r5), setop_union_all/intersect
-# (except + union_by_name here), proj_distinct/filter_basic
-# (derived_status + rename_cast here), ml_score_batch (rows-only;
-# serving prefix hash-verified by ml_feature_assembly r3); plus 5
-# displaced by the new round-6 queries: join_cross/full_outer/
-# null_safe (anti/asof/inner_broadcast/left_composite/semi/explode
-# still here), window_latest_per_key (sibling agg_latest_per_key
-# green r5), window_tumbling_hourly (session + topk here),
-# text_token_stats (quality_score/lang_id/token_count_bpe here),
-# subquery_scalar_avg_diff (subquery_in_filter here),
-# proj_rename_cast (proj_derived_status here), scalar_hash_md5 (md5
-# machinery hash-verified end-to-end by the entire md5 sketch/minhash
-# family, r4/r5 windows), multimodal_extract_features (the pandas-UDF
-# featurize path is pinned by the r4-green multimodal_real rows and
-# the new multimodal_arrow_bytes oracle row), window_topk_recent
-# (TakeOrderedAndProject plan pin in tests/test_plans.py; rank/session
-# siblings here), setop_union_by_name and setop_except (both r2-green;
-# the multiset EXCEPT ALL / INTERSECT ALL variants were r3-verified on
-# the same machinery).
-# Round-7 rotation plan: executed below as ROUND7_WINDOW (the comment
-# in earlier rounds said "23 carries"; the correct count is 25 — see
-# CORRECTNESS_r0{1..6} latest-round arithmetic: 25 queries' latest row
-# is round 2). All 25 carries were pre-validated green/rows-only at
-# sf0.01 under the driver-mirror comparator at round-6 end
-# (2026-08-14), so the r7 window composition is known-clean.
-ROUND6_WINDOW = [
-    # the 4 round-5 staged rows (never driver-checked; locally green at
-    # sf0.001 + sf0.01 under the driver-mirror comparator)
-    "graph_pagerank_bucketed",
-    "analytics_skyline_parts",
-    "events_markov_transitions",
-    "streaming_markov_transitions",
-    # the 13 NEW round-6 queries (training-data curation gates +
-    # streaks/lift/runtime-bloom — new code gets a driver row in its
-    # birth round)
-    "corpus_contamination_4gram",
-    "sample_domain_quota",
-    "quality_repetition_signals",
-    "corpus_mix_rebalance",
-    "streaming_quota_admission",
-    "events_streak_islands",
-    "market_rule_lift",
-    "scan_runtime_bloom_join",
-    "join_asof_cogrouped",
-    "multimodal_arrow_bytes",
-    "sketch_cms_md5_tokens",
-    "scalar_variant_props",
-    "scan_orc_pushdown",
-    # the 5 hash-green r1 rows round 5 dropped
-    "agg_median",
-    "window_percentiles",
-    "scalar_regexp_replace",
-    "agg_rollup",
-    "agg_cube",
-    # the 6 rows-only entries whose latest driver row is round 1
-    "agg_approx_distinct",
-    "agg_percentile_approx",
-    "dedup_cluster_docs",
-    "sample_seeded",
-    "sample_stratified",
-    "vector_kmeans_cluster_sizes",
-    # 22 refills from the 47 stalest (round-2-latest) rows
-    "flagship_dashboard",
-    "flagship_stats",
-    "join_anti",
-    "join_asof",
-    "join_explode_ownership",
-    "join_inner_broadcast",
-    "join_left_composite",
-    "join_semi",
-    "proj_derived_status",
-    "range_join_time_binned",
-    "scalar_json",
-    "scalar_string_funcs",
-    "subquery_in_filter",
-    "text_exact_dedup",
-    "text_lang_id",
-    "text_ngram_jaccard",
-    "text_quality_score",
-    "text_token_count_bpe",
-    "timeseries_gapfill_daily",
-    "vector_cosine_topk",
-    "window_rank_analytic",
-    "window_session_30m",
-]
+# The driver's correctness ledgers, one CORRECTNESS_r<round>.json per
+# round at the repo root, each mapping query name -> comparison row.
+_REPO_ROOT = Path(__file__).resolve().parents[2]
+_LEDGER_ROUND = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
-# The ROUND-7 driver window (the first 50 registry entries this round).
-# Composition per the VERDICT-r6 plan: the 2 NEW round-7 queries first
-# (new code gets a driver row in its birth round), then ALL 25 queries
-# whose latest driver row is round 2 (computed from
-# CORRECTNESS_r0{1..6}: after this window no query's latest row
-# predates round 3 — round-2 verification debt is CLEARED), then 23
-# refills from the 49 round-3-latest rows, chosen for module spread
-# across the machinery that changed most since r3 (TPC-H analytics,
-# corpus pipeline, multimodal codecs, validation, lake layout, SCD2,
-# sketches, streaming corpus, BM25, span dedup). The remaining 26
-# r3-latest rows are the enumerated round-8 carry list: every one is
-# either rows-only-by-design with a ledgered sibling (the dedup_*/
-# vector_ann_* probe modes, sketch HLL/theta, agg_pandas_udaf_gmean)
-# or has same-module machinery IN this window (text_* family via
-# text_bm25_topk/text_chunk_dedup here; vector_* exact modes via the
-# r4-green IVFPQ exact sibling; analytics q2/16/20/21 here cover the
-# TPC-H join/agg shapes).
-ROUND7_WINDOW = [
-    # the 2 new round-7 curation gates (queries/round7.py)
-    "curation_url_canonical_hostdedup",
-    "quality_length_quantile_audit",
-    # ALL 25 round-2-latest carries — clears round-2 debt
-    "join_cross",
-    "join_full_outer",
-    "join_null_safe",
-    "ml_score_batch",
-    "multimodal_extract_features",
-    "proj_distinct",
-    "proj_filter_basic",
-    "proj_rename_cast",
-    "scalar_base64",
-    "scalar_conditional",
-    "scalar_datetime",
-    "scalar_hash_md5",
-    "setop_except",
-    "setop_intersect",
-    "setop_union_all",
-    "setop_union_by_name",
-    "subquery_scalar_avg_diff",
-    "text_token_stats",
-    "window_latest_per_key",
-    "window_nth_lag_default",
-    "window_ntile",
-    "window_rolling_avg",
-    "window_sliding_10m_5m",
-    "window_topk_recent",
-    "window_tumbling_hourly",
-    # 23 refills from the 49 round-3-latest rows (round-7 execution)
-    "analytics_q16_supplier_cnt",
-    "analytics_q20_dominant_supplier",
-    "analytics_q21_waiting_supplier",
-    "analytics_q2_min_cost_supplier",
-    "corpus_clean_pipeline",
-    "corpus_dedup_keep_best",
-    "corpus_pack_sequences",
-    "corpus_shard_assignment",
-    "corpus_source_mixture",
-    "corpus_train_holdout_split",
-    "dedup_cluster_exact",
-    "ml_feature_assembly",
-    "multimodal_audio_spectrum",
-    "multimodal_audio_windows",
-    "multimodal_decode_real",
-    "multimodal_video_frames",
-    "quality_data_validation",
-    "scan_zorder_two_dim",
-    "scd2_user_event_history",
-    "sketch_heavy_hitter_tokens",
-    "streaming_corpus_clean",
-    "text_bm25_topk",
-    "text_chunk_dedup",
-]
+def committed_ledgers() -> list[Path]:
+    return sorted(
+        p
+        for p in _REPO_ROOT.glob("CORRECTNESS_r*.json")
+        if _LEDGER_ROUND.fullmatch(p.name)
+    )
 
 
-# The ROUND-8 driver window (the first 50 registry entries this round).
-# Composition per the VERDICT-r7 plan (items 1 + 5): the 5 round-8
-# STAGED rows first (the only never-driver-checked queries — staged in
-# rounds 6-7, locally hash-green at sf0.001 + sf0.01), then the 2 NEW
-# round-8 curation gates (birth-round rule), then the 3 graph queries
-# whose r7 session-cached-artifact refactor (round4_staging2.py
-# _pr_folded_edges/_cc_withself_edges) postdates their latest driver
-# rows, then ALL 26 round-3-latest carries (after this window no
-# query's latest driver row predates round 4 — round-3 debt is
-# CLEARED), then 14 refills from the 47 remaining round-4-latest rows,
-# chosen for refactor adjacency (the rest of the graph family shares
-# the r7 session-cached pair/oriented artifacts) and module spread
-# (md5 dedup siblings, exact ANN siblings, sketches, streaming export,
-# similarity joins, the RANGE window).
-ROUND8_WINDOW = [
-    # the 5 round-6/7 staged rows (never driver-checked)
-    "curation_dsir_importance_topk",
-    "corpus_token_budget_epochs",
-    "proj_unpivot_metrics",
-    "agg_listagg_nations",
-    "streaming_dedup_watermark",
-    # the 2 NEW round-8 curation gates (queries/round8.py)
-    "curation_quality_keep_matrix",
-    "curation_compliance_source_filter",
-    # the 3 artifact-refactored graph queries (post-refactor hash rows)
-    "graph_pagerank_copurchase",
-    "graph_pagerank_weighted",
-    "graph_minlabel_components",
-    # ALL 26 round-3-latest carries — clears round-3 debt
-    "agg_pandas_udaf_gmean",
-    "dedup_cluster_docs_star",
-    "dedup_incremental_newbatch",
-    "dedup_minhash_pairs",
-    "dedup_semantic_pairs",
-    "dedup_simhash_pairs",
-    "sketch_hll_group_users",
-    "sketch_theta_user_overlap",
-    "text_boilerplate_ngrams",
-    "text_charngram_familiarity",
-    "text_collapse_repeats",
-    "text_contamination_check",
-    "text_fuzzy_token_pairs",
-    "text_gopher_rules",
-    "text_pii_scrub",
-    "text_rolling_fingerprint",
-    "text_segment_udtf",
-    "vector_ann_ivf_exact",
-    "vector_ann_ivf_topk",
-    "vector_ann_lsh_neardup",
-    "vector_ann_pq_topk",
-    "vector_centroid_by_group",
-    "vector_cosine_neardup",
-    "vector_cosine_topk_expr_q200",
-    "vector_cosine_topk_fast",
-    "vector_cosine_topk_fast_q200",
-    # 14 refills from the 47 remaining round-4-latest rows
-    "graph_sssp_copurchase",
-    "graph_triangle_count",
-    "graph_kcore_copurchase",
-    "graph_clustering_topk",
-    "dedup_minhash_pairs_md5",
-    "dedup_simhash_pairs_md5",
-    "dedup_semantic_exact",
-    "vector_ann_ivfpq_exact",
-    "sketch_hll_md5_users",
-    "sketch_kmv_overlap3",
-    "streaming_hll_users",
-    "text_prefix_filter_join",
-    "text_containment_neardup",
-    "window_trailing_30d_range",
-]
+def ledger_keys(ledgers: Iterable[str | Path]) -> dict[str, int]:
+    """Each ledgered query's driver-order key: the round of its most
+    recent row if that row passed (value hash matched, or a rows-only
+    ``no_oracle`` row), else -1 so a red query is re-checked first."""
+    latest: dict[str, tuple[int, dict]] = {}
+    for path in ledgers:
+        rnd = int(_LEDGER_ROUND.fullmatch(Path(path).name).group(1))
+        for name, row in json.loads(Path(path).read_text()).items():
+            if name not in latest or rnd > latest[name][0]:
+                latest[name] = (rnd, row)
+    return {
+        name: rnd
+        if row.get("hash_match") is True or row.get("err") == "no_oracle"
+        else -1
+        for name, (rnd, row) in latest.items()
+    }
 
-# Round-16 rotation plan, MATERIALIZED at round-14 end (the standing
-# next-next-window discipline). Composition: the 18 round-10-latest
-# rows — the five carries this session's births displaced
-# (window_session_30m, timeseries_twap_per_user, text_ngram_jaccard,
-# timeseries_ohlc_hourly, text_exact_dedup) plus the 12 rows round 15
-# left at r10-latest plus scalar_json (displaced when the 4th r14
-# birth joined ROUND15) — then 32 of the 50 round-11-latest carries.
-# SESSION AMENDMENT (2026-08-16 r15 session, the standing displacement
-# rule): the three r15 births — vector_ann_ivfbq_topk (the cell-pruned
-# sign-bit tier, VERDICT r14 item 3), vector_ann_stream_probe (the
-# fenced streaming query probe, VERDICT r14 item 5) and
-# vector_ann_ivfbq_merged_topk (the persisted BQ inverted file with
-# frozen-quantizer absorb — the deferred (b) done in-session), all
-# hash-green at sf0.001+sf0.01 at staging time — front the window,
-# displacing the END carries text_quality_score, vector_ivf_merge_topk
-# and text_lang_id (r11-latest; they move to ROUND17, which fronts ALL
-# r11-latest rows — all three least-risk: the quality/text batteries
-# are r12-green on shared machinery, and the merged-IVF family has the
-# r15-checked stream-probe row exercising the same committed artifact
-# end-to-end). Final composition: 3 births + 18 r10 rows + 29 r11
-# carries.
-# The 18 r11 rows held to round 17 are each the least-risk member of
-# their family (a hash-green r12-r15 sibling on identical machinery,
-# or a ledgered estimator whose exact twin is IN this window):
-# agg_approx_distinct (exact twin agg_distinct in-window),
-# agg_percentile_approx (exact median/bands green r14), agg_cube /
-# agg_rollup (agg_grouping_sets green r14), sample_stratified
-# (sample_stratified_exact_k green r14), vector_kmeans_cluster_sizes
-# (seeded/exact semantic siblings green r13/r15),
-# scalar_regexp_replace / scalar_string_funcs (scalar_string_advanced
-# green r14), window_percentiles (agg_percentile_bands green r14),
-# window_rolling_avg (window_trailing_30d_range green r14),
-# window_latest_per_key (agg_latest_per_key green r14),
-# window_rank_analytic (plan-pinned TakeOrderedAndProject family,
-# window_topk_recent green r12), search_mmr_rerank_ivf (exact
-# search_mmr_rerank in-window), text_token_count_bpe
-# (corpus_bpe_encode green r14), subquery_in_filter
-# (analytics_q4_exists_priority green r14), proj_derived_status
-# (proj_filter_basic/scalar_conditional green r12),
-# timeseries_gapfill_daily (timeseries_max_drawdown green r14,
-# timeseries_ohlc_hourly in-window), vector_cosine_topk (q200 twin
-# r14-checked, BLAS sibling r15-checked — moved to the holds when
-# scalar_json joined the r10 group, see the list comment). New
-# round-15-session births displace carries from the END.
-ROUND16_WINDOW = [
-    # the 3 r15-session births (birth-window driver rows)
-    "vector_ann_ivfbq_topk",
-    "vector_ann_stream_probe",
-    "vector_ann_ivfbq_merged_topk",
-    # the 18 round-10-latest rows — clears round-10 debt. scalar_json
-    # joined this group when the 4th r14 birth (vector_ann_bq_topk)
-    # displaced it from ROUND15_WINDOW's end; to keep the window at 50
-    # the r11 carry vector_cosine_topk moved to the round-17 holds
-    # (least-risk: its q200 twin is r14-checked and the fast BLAS
-    # sibling vector_cosine_topk_fast is r15-checked, identical
-    # ranking machinery).
-    "scalar_json",
-    "agg_distinct",
-    "agg_filtered_count",
-    "analytics_q5_region_volume",
-    "analytics_q7_volume",
-    "analytics_q8_market_share",
-    "analytics_q9_profit",
-    "dedup_cluster_docs",
-    "flagship_dashboard",
-    "flagship_stats",
-    "join_asof",
-    "join_inner_broadcast",
-    "sample_seeded",
-    "text_exact_dedup",
-    "text_ngram_jaccard",
-    "timeseries_ohlc_hourly",
-    "timeseries_twap_per_user",
-    "window_session_30m",
-    # 29 of the 50 round-11-latest carries (text_quality_score,
-    # vector_ivf_merge_topk and text_lang_id displaced by the r15
-    # births, see above)
-    "agg_incremental_mv_merge",
-    "analytics_skyline_parts",
-    "corpus_contamination_4gram",
-    "corpus_dedup_keep_best",
-    "corpus_mix_rebalance",
-    "corpus_shard_assignment",
-    "dedup_winnowing_pairs",
-    "events_markov_transitions",
-    "events_streak_islands",
-    "graph_pagerank_bucketed",
-    "join_anti",
-    "join_asof_cogrouped",
-    "join_explode_ownership",
-    "join_left_composite",
-    "join_semi",
-    "market_rule_lift",
-    "multimodal_arrow_bytes",
-    "quality_repetition_signals",
-    "range_join_time_binned",
-    "sample_domain_quota",
-    "scalar_variant_props",
-    "scan_orc_pushdown",
-    "scan_runtime_bloom_join",
-    "search_hybrid_rrf",
-    "search_mmr_rerank",
-    "sketch_cms_md5_tokens",
-    "streaming_markov_transitions",
-    "streaming_quota_admission",
-    "text_chunk_dedup",
-]
 
-# Round-17 rotation plan, MATERIALIZED at round-15 end (the standing
-# next-next-window discipline). After the round-16 window runs,
-# exactly 21 rows sit at round-11-latest (the 18 documented holds plus
-# text_quality_score, vector_ivf_merge_topk and text_lang_id,
-# displaced from ROUND16 by the r15 births) and 50 at
-# round-12-latest. Composition: ALL 21 round-11-latest rows — clears
-# round-11 debt — then 29 of the 50 round-12-latest rows, chosen for
-# watch priority (volatile banded
-# metrics, unique machinery, rows-only families with their exact
-# siblings) + module spread. The 21 r12 rows held to round 18 are each
-# the least-risk member of its family (shared machinery with an
-# r14/r15-green sibling or an in-window family twin): join_cross /
-# join_null_safe (join battery, join_full_outer in-window),
-# proj_distinct / proj_filter_basic / proj_rename_cast (projection
-# battery, quality_data_validation in-window on the same scan
-# machinery), scalar_conditional / scalar_datetime / scalar_hash_md5
-# (scalar battery, scalar_base64 in-window; scalar_string_advanced
-# green r14), setop_except / setop_intersect / setop_union_all /
-# setop_union_by_name (ALL-variants checked r15), window_nth_lag_
-# default / window_ntile / window_sliding_10m_5m / window_topk_recent
-# / window_tumbling_hourly (window battery; window_trailing_30d_range
-# green r14, time windows r15-checked via session sibling),
-# text_token_stats (text battery, quality_length_quantile_audit
-# in-window), multimodal_audio_windows + multimodal_extract_features
-# (Arrow path shared with multimodal_decode_real / _audio_spectrum /
-# _video_frames, all three in-window), text_bm25_topk (displaced when
-# text_lang_id joined the r11 group — least-risk: the retrieval
-# machinery is exercised by search_hybrid_rrf and the BM25 leg is
-# byte-shared with it). New round-16 session births displace refills
-# from the END, never the r11 carries.
-#
-# AMENDED at round-16 mid-session per that standing rule: the 4 r16
-# births (the BQ inverted file's fenced streaming absorb + the three
-# IVF delete-lifecycle stages, queries/round19_staging.py and
-# queries/round20_staging.py) front the window; the 4 END refills
-# they displace — search_hybrid_rrf_ivf, sketch_heavy_hitter_tokens,
-# streaming_corpus_clean, subquery_scalar_avg_diff — become
-# r12-latest holds for ROUND18. Least-risk, each: search_hybrid_rrf_
-# ivf is rows-only ledgered with exact sibling search_hybrid_rrf
-# green r11 and its BM25 leg byte-shared; sketch_heavy_hitter_tokens'
-# sibling sketch_cms_md5_tokens is in ROUND16; streaming_corpus_
-# clean's machinery is re-driven every round by curation_stream_
-# training_set (r15-green); subquery_scalar_avg_diff shares scan+agg
-# machinery with in-window subquery_in_filter. Amended a second time
-# when the round-16 session's part-3 births landed (filtered ANN +
-# tombstone-aware compact, queries/round21_staging.py): they displace
-# scan_zorder_two_dim and scd2_user_event_history from the END into
-# ROUND18's r12 cohort — least-risk: scan_zorder's lake-layout
-# machinery shares the manifest/zone-map protocol with
-# scan_zonemap_range_agg (r14-green) and the whole scan_* family is
-# r16-checked; scd2_user_event_history shares the SCD2 machinery with
-# scd2_incremental_merge (in ROUND16). Final composition:
-# 6 births + 21 r11 carries + 23 r12 refills = 50.
-ROUND17_WINDOW = [
-    # r16 session births (driver CORRECTNESS debut next round)
-    "vector_ann_ivfbq_stream_topk",
-    "vector_ann_ivf_delete_topk",
-    "vector_ann_ivf_delete_readd_topk",
-    "vector_ann_ivf_delete_rewrite_topk",
-    "vector_ann_ivf_filtered_topk",
-    "vector_ann_ivf_compact_dead_topk",
-    # ALL 21 round-11-latest rows — clears round-11 debt
-    "agg_approx_distinct",
-    "agg_cube",
-    "agg_percentile_approx",
-    "agg_rollup",
-    "proj_derived_status",
-    "sample_stratified",
-    "scalar_regexp_replace",
-    "scalar_string_funcs",
-    "search_mmr_rerank_ivf",
-    "subquery_in_filter",
-    "text_lang_id",
-    "text_quality_score",
-    "text_token_count_bpe",
-    "timeseries_gapfill_daily",
-    "vector_cosine_topk",
-    "vector_ivf_merge_topk",
-    "vector_kmeans_cluster_sizes",
-    "window_latest_per_key",
-    "window_percentiles",
-    "window_rank_analytic",
-    "window_rolling_avg",
-    # 29 of the 50 round-12-latest refills
-    "analytics_q16_supplier_cnt",
-    "analytics_q2_min_cost_supplier",
-    "analytics_q20_dominant_supplier",
-    "analytics_q21_waiting_supplier",
-    "corpus_bpe_pipeline",
-    "corpus_bpe_train_merges",
-    "corpus_clean_pipeline",
-    "corpus_pack_sequences",
-    "corpus_source_mixture",
-    "corpus_train_holdout_split",
-    "curation_url_canonical_hostdedup",
-    "dedup_cluster_exact",
-    "dedup_minhash_pairs_md5",
-    "dedup_semantic_pairs_seeded",
-    "join_full_outer",
-    "ml_feature_assembly",
-    "ml_score_batch",
-    "multimodal_audio_spectrum",
-    "multimodal_decode_real",
-    "multimodal_video_frames",
-    "quality_data_validation",
-    "quality_length_quantile_audit",
-    "scalar_base64",
-]
-
-# Round-18 rotation plan, MATERIALIZED at round-16 mid-session (the
-# standing next-next-window discipline). After ROUND17 runs, the
-# r12-latest cohort is exactly 27 rows (the 21 documented holds above
-# plus the 6 refills ROUND17's two amendments displaced) and 49 rows
-# sit at round-13-latest. Composition: ALL 27 r12-latest rows — clears
-# round-12 debt — then 23 of the 49 r13-latest rows, chosen for watch
-# priority: BOTH banded bench families whole (the graph family and
-# simhash/prefix-join text similarity, so a band excursion and a
-# driver hash row land in the same round), the ANN exact/probe pairs
-# (each approximate row re-checked beside its exact conservation
-# sibling), the semantic-dedup chain, and the streaming sketches. The
-# 26 r13 rows held to round 19 are each the least-risk member of its
-# family: the text battery (text_gopher_rules, quality_*) shares one
-# documents-scan machinery with r13-green in-family twins; curation_*
-# rows are r13-green with the curation_stream_* machinery re-driven
-# every round; theta/kmv sketches have md5 twins in-window here;
-# vector_ann_ivf_topk_seeded / vector_ann_lsh_neardup /
-# vector_centroid_by_group / vector_cosine_neardup are machinery-
-# shared with in-window exact siblings; the vector_cosine_topk_fast /
-# _expr_q200 crossover pair (displaced by the second amendment's r12
-# arrivals) is re-measured by every bench run and its exact sibling
-# vector_cosine_topk sits in ROUND17; text_segment_udtf is an
-# API-parity row timed every bench run.
-ROUND18_WINDOW = [
-    # ALL 27 round-12-latest rows — clears round-12 debt
-    "join_cross",
-    "join_null_safe",
-    "multimodal_audio_windows",
-    "multimodal_extract_features",
-    "proj_distinct",
-    "proj_filter_basic",
-    "proj_rename_cast",
-    "scalar_conditional",
-    "scalar_datetime",
-    "scalar_hash_md5",
-    "scan_zorder_two_dim",
-    "scd2_user_event_history",
-    "search_hybrid_rrf_ivf",
-    "setop_except",
-    "setop_intersect",
-    "setop_union_all",
-    "setop_union_by_name",
-    "sketch_heavy_hitter_tokens",
-    "streaming_corpus_clean",
-    "subquery_scalar_avg_diff",
-    "text_bm25_topk",
-    "text_token_stats",
-    "window_nth_lag_default",
-    "window_ntile",
-    "window_sliding_10m_5m",
-    "window_topk_recent",
-    "window_tumbling_hourly",
-    # 23 of the 49 round-13-latest refills
-    "dedup_cluster_docs_star",
-    "dedup_ensemble_clusters",
-    "dedup_minhash_pairs",
-    "dedup_semantic_exact",
-    "dedup_semantic_incremental",
-    "dedup_semantic_pairs",
-    "dedup_simhash_pairs",
-    "dedup_simhash_pairs_md5",
-    "graph_clustering_topk",
-    "graph_kcore_copurchase",
-    "graph_minlabel_components",
-    "graph_pagerank_copurchase",
-    "graph_pagerank_weighted",
-    "graph_sssp_copurchase",
-    "graph_triangle_count",
-    "sketch_hll_md5_users",
-    "streaming_dedup_watermark",
-    "streaming_hll_users",
-    "text_prefix_filter_join",
-    "vector_ann_ivf_exact",
-    "vector_ann_ivf_topk",
-    "vector_ann_ivfpq_exact",
-    "vector_ann_pq_topk",
-]
-
-# Round-11 rotation plan (execute as ROUND11_WINDOW next round).
-# [HISTORICAL — kept as written at round-10 end; the round-11 session
-# found this plan undercounted the r6 cohort by one
-# (range_join_time_binned, displaced from ROUND10's refills by r10's
-# own births after this list was drawn) and the mirror split shifted
-# to 45+5 once the two r11 births joined; the ROUND11_WINDOW comment
-# below holds the corrected, executed truth.] Plan as written: ALL
-# 38 remaining round-6-latest rows — after that window no query's
-# latest driver row predates round 7 and round-6 debt is CLEARED —
-# then 12 refills from the 50 round-7-latest rows, chosen for watch
-# priority + module spread: corpus_dedup_keep_best (re-verifies the
-# round-10 max_by rewrite at the driver), window_rolling_avg (the
-# noop-materializer poster child), text_chunk_dedup,
-# corpus_shard_assignment, window_latest_per_key, dedup_cluster_exact,
-# analytics_q2_min_cost_supplier, scalar_hash_md5, setop_union_by_name,
-# quality_data_validation, multimodal_extract_features,
-# subquery_scalar_avg_diff. The 38 carries are (alphabetical):
-# agg_approx_distinct, agg_cube, agg_percentile_approx, agg_rollup,
-# analytics_skyline_parts, corpus_contamination_4gram,
-# corpus_mix_rebalance, events_markov_transitions,
-# events_streak_islands, graph_pagerank_bucketed, join_anti,
-# join_asof_cogrouped, join_explode_ownership, join_left_composite,
-# join_semi, market_rule_lift, multimodal_arrow_bytes,
-# proj_derived_status, quality_repetition_signals, sample_domain_quota,
-# sample_stratified, scalar_regexp_replace, scalar_string_funcs,
-# scalar_variant_props, scan_orc_pushdown, scan_runtime_bloom_join,
-# sketch_cms_md5_tokens, streaming_markov_transitions,
-# streaming_quota_admission, subquery_in_filter, text_lang_id,
-# text_quality_score, text_token_count_bpe, timeseries_gapfill_daily,
-# vector_cosine_topk, vector_kmeans_cluster_sizes, window_percentiles,
-# window_rank_analytic. All 50 pre-validated at sf0.01 under the
-# driver-mirror comparator at round-10 end (2026-08-15): 46 hash-green
-# + 4 rows-only (agg_approx_distinct, agg_percentile_approx,
-# sample_stratified, vector_kmeans_cluster_sizes — all ledgered with
-# green exact siblings), 0 red. The FOUR round-11 staged queries
-# front the window as their birth rows, displacing the last four
-# refills (subquery_scalar_avg_diff, multimodal_extract_features,
-# quality_data_validation, setop_union_by_name):
-# dedup_winnowing_pairs (queries/round11_staging.py),
-# search_hybrid_rrf + search_mmr_rerank (queries/retrieval.py), and
-# agg_incremental_mv_merge (queries/mv_maintenance.py) — every one
-# validated hash-green at sf0.001 AND sf0.01 at staging time (the
-# retrieval pair and the MV merge additionally via verify-skill
-# driver-contract runs, 2026-08-15). The FULL post-displacement
-# 50-row composition (4 staged + 38 carries + 8 refills) was
-# re-mirrored end-to-end at sf0.01 under the driver-gate comparator
-# on 2026-08-15: 46 hash-green + 4 rows-only (agg_approx_distinct,
-# agg_percentile_approx, sample_stratified,
-# vector_kmeans_cluster_sizes — all ledgered with green exact
-# siblings), 0 red. Any further new round-11 queries displace
-# refills from the END of the list, never the r6 carries.
-#
-# Round-10 rotation (VERDICT r9 item 1 — executes the plan written
-# here at round-9 end, all 50 rows pre-validated at sf0.01 under the
-# driver-mirror comparator on 2026-08-14): the 2 round-10 staged rows
-# first (queries/round10_staging.py — curation_scorer_oov_audit,
-# curation_scorer_length_bias, the only registry queries without a
-# driver CORRECTNESS row), then ALL 35 remaining round-5-latest rows
-# — after this window no query's latest driver row predates round 6
-# and round-5 debt is CLEARED — then refills from the 50
-# round-6-latest rows, chosen for flagship freshness + module spread.
-# Per the plan's displacement rule, new round-10 queries displace
-# refills from the END of the list, never the r5 carries.
-
-# Round-15 rotation plan, MATERIALIZED at round-13 end (one round
-# ahead: the round-13 session birthed six never-driver-checked rows
-# across its two staging files, so their window exists from birth; the
-# round-14 session amends per the standing displacement rule).
-# Composition: the 6 never-driver-checked births — vector_ann_lsh_seeded
-# + scan_time_travel_audit (round15_staging, r13 session) and
-# scan_changes_feed + agg_mv_apply_changes + scan_schema_evolution_agg
-# + vector_ann_sq8_topk (round16_staging, r13 session continuation; all
-# four FULL hash oracles, mirrored green at sf0.001 AND sf0.01 at
-# staging time, benched + banded + sloped from day one) — then the 6
-# round-9-latest hold-overs ROUND14 documented (clears round-9 debt),
-# then 38 of the 50 round-10-latest carries. The 12 r10 rows held to
-# round 16, each the least-risk member of its family:
-# flagship_dashboard / flagship_stats (entry() smoke-checked by the
-# driver EVERY round + bench canary), join_inner_broadcast / join_asof
-# (join battery green r12; join_asof_forward carried in ROUND14),
-# analytics_q5/q7/q8/q9 (TPC-H battery benched every run; q3 carried
-# in ROUND14, q10-q22 carried HERE), agg_distinct / agg_filtered_count
-# (exact-agg machinery shared with the r12-green agg battery),
-# sample_seeded (rows-only F9 parity row; hash-green sibling
-# sample_weighted_systematic is IN this window), dedup_cluster_docs
-# (rows-only; exact sibling dedup_cluster_exact hash-green, family
-# carried in ROUND13). New round-14/15 session births displace
-# carries from the END.
-ROUND15_WINDOW = [
-    # the 10 never-driver-checked births (birth-window driver rows).
-    # SESSION AMENDMENTS (2026-08-16 r13 session, the standing
-    # displacement rule): vector_ann_ivfsq_topk — the composed IVF_SQ8
-    # tier — and scan_merge_upsert_agg — MERGE INTO as a first-class
-    # manifest operator — both hash-green at sf0.001+sf0.01 at staging
-    # time, displaced the END carries window_session_30m and
-    # timeseries_twap_per_user (r10-latest; they join the held r10
-    # rows heading round 16).
-    # SESSION AMENDMENTS (2026-08-16 r14 session, same rule): the two
-    # r14 births — dedup_incremental_newbatch (md5 persisted-index
-    # in-place oracle upgrade, VERDICT r13 item 6: the row has an
-    # oracle the driver has never checked, so it re-enters as a birth)
-    # and curation_stream_training_set (the composed stream→admission→
-    # ensemble→splits pipeline, VERDICT r13 item 7) and
-    # scan_merge_evolved_agg (MERGE × schema evolution, the r13-verdict
-    # item-8 seam) — all hash-green at sf0.001+sf0.01 at staging time,
-    # displacing the END carries text_ngram_jaccard,
-    # timeseries_ohlc_hourly and text_exact_dedup (r10-latest; they
-    # head round 16 with the held rows).
-    "dedup_incremental_newbatch",
-    "curation_stream_training_set",
-    "scan_merge_evolved_agg",
-    "vector_ann_bq_topk",
-    "vector_ann_lsh_seeded",
-    "scan_time_travel_audit",
-    "scan_changes_feed",
-    "agg_mv_apply_changes",
-    "scan_schema_evolution_agg",
-    "vector_ann_sq8_topk",
-    "vector_ann_ivfsq_topk",
-    "scan_merge_upsert_agg",
-    # the 6 round-9-latest hold-overs — clears round-9 debt
-    "agg_histogram_value",
-    "anomaly_daily_zscore",
-    "sample_weighted_systematic",
-    "scalar_array_funcs",
-    "setop_except_all",
-    "setop_intersect_all",
-    # 38 of the 50 round-10-latest carries
-    "agg_corr_value_hour",
-    "agg_equidepth_deciles",
-    "agg_gini_value",
-    "agg_group_q1",
-    "agg_median",
-    "agg_pivot_event_types",
-    "agg_trend_slope_by_type",
-    "agg_variance_manual",
-    "agg_weighted_median_by_source",
-    "analytics_q10_returns",
-    "analytics_q11_share",
-    "analytics_q12_priority_mix",
-    "analytics_q13_custdist",
-    "analytics_q14_promo",
-    "analytics_q15_top_supplier",
-    "analytics_q17_small_qty",
-    "analytics_q18_large_orders",
-    "analytics_q19_disjunctive",
-    "analytics_q22_dormant",
-    "analytics_q4_exists_priority",
-    "analytics_q6_selective",
-    "corpus_filter_funnel",
-    "corpus_vocab_topk",
-    "curation_scorer_length_bias",
-    "curation_scorer_oov_audit",
-    "dedup_index_merge_pairs_md5",
-    "events_pareto_user_deciles",
-    "events_weekday_profile",
-    "join_lookup_latest_state",
-    "quality_entity_share_audit",
-    "quality_independence_residuals",
-    "scalar_interval",
-    # (window_session_30m and timeseries_twap_per_user were displaced
-    # by the r13 session's 7th/8th births vector_ann_ivfsq_topk and
-    # scan_merge_upsert_agg; text_ngram_jaccard, timeseries_ohlc_hourly,
-    # text_exact_dedup and scalar_json by the r14 session's births
-    # dedup_incremental_newbatch, curation_stream_training_set,
-    # scan_merge_evolved_agg and vector_ann_bq_topk — all six head
-    # round 16 with the held rows)
-]
-
-# Round-14 rotation plan, MATERIALIZED at round-13 end (VERDICT r12
-# item 2). Composition: the 3 round-14 staged births — ALL
-# never-driver-checked registry rows get their birth here:
-# scan_zonemap_range_agg + corpus_leakage_safe_splits (r12-continuation
-# staging) and scan_delete_rewrite_fetch (r13 session, the UPDATE-shaped
-# lake lifecycle) — the "3 candidates for ≤2 slots" decision resolves
-# to THREE slots because the r13 session displaced two more carries
-# (see below), leaving room while still clearing every r8-latest row.
-# Then the 3 round-8-latest hold-overs (agg_pandas_udaf_gmean,
-# vector_cosine_topk_fast_q200, window_trailing_30d_range — the
-# oldest rows in the registry after round 13) + 44 of the 50
-# round-9-latest carries. The 6 r9 rows held to round 15, each the
-# least-risk member of its family (a hash-green r12/r13 sibling or an
-# in-window family twin): setop_except_all / setop_intersect_all
-# (setop_except / setop_intersect green r12), anomaly_daily_zscore
-# (anomaly_daily_mad carried in-window AND canaried every bench run),
-# sample_weighted_systematic (sample_stratified_exact_k carried),
-# scalar_array_funcs (scalar battery green r12), agg_histogram_value
-# (shares the DECIMAL-accumulator helpers with the r12-green agg
-# battery). New round-14 session births displace carries from the END.
-ROUND14_WINDOW = [
-    # the 3 round-14 staged rows (birth-window driver rows)
-    "scan_zonemap_range_agg",
-    "corpus_leakage_safe_splits",
-    "scan_delete_rewrite_fetch",
-    # the 3 round-8-latest hold-overs — clears round-8 debt
-    "agg_pandas_udaf_gmean",
-    "vector_cosine_topk_fast_q200",
-    "window_trailing_30d_range",
-    # 44 of the 50 round-9-latest carries
-    "agg_bucketed_no_shuffle",
-    "agg_collect_sorted",
-    "agg_exact_median_by_type",
-    "agg_grouping_sets",
-    "agg_latest_per_key",
-    "agg_mode_event_type_daily",
-    "agg_percentile_bands",
-    "agg_time_grain_rollup",
-    "analytics_q3_shipping",
-    "anomaly_daily_mad",
-    "corpus_bigram_topk",
-    "corpus_bpe_encode",
-    "corpus_dedup_rate_by_source",
-    "corpus_overlap_chunks",
-    "corpus_source_overlap",
-    "corpus_tfidf_topterm",
-    "curation_compliance_span_bridge",
-    "curation_quality_linear_scorer",
-    "dedup_pipeline_blocked_verify",
-    "events_dau_wau_stickiness",
-    "events_funnel_conversion",
-    "events_retention_cohort",
-    "events_session_conversion",
-    "hierarchy_rollup_to_root",
-    "join_asof_forward",
-    "join_bucketed_colocated",
-    "join_fuzzy_levenshtein",
-    "join_interval_overlap",
-    "join_posexplode",
-    "join_salted_skew",
-    "market_basket_pairs",
-    "ml_kfold_assignment",
-    "profile_table_stats",
-    "quality_benford_digits",
-    "quality_rank_normalize",
-    "sample_stratified_exact_k",
-    "scalar_string_advanced",
-    "scan_dpp_partitioned_join",
-    "scan_time_range_pruned",
-    "scd2_incremental_merge",
-    "sketch_kmv_distinct_users",
-    "text_novelty_score",
-    "timeseries_max_drawdown",
-    "vector_ann_ivfpq_topk",
-]
-
-# Round-13 rotation plan, MATERIALIZED at round-12 end: the 2
-# round-13 staged births (dedup_semantic_incremental,
-# dedup_ensemble_clusters — both FULL hash oracles, mirrored green at
-# sf0.001+sf0.01 at staging time) + 48 of the 49 round-8-latest
-# carries. The cohort is 51 candidates for a 50-row window; the one
-# row left to head round-14's refills is agg_pandas_udaf_gmean — the
-# API-parity demo whose oracle and aggregation machinery are shared
-# with hash-checked production siblings, making it the least-risk
-# 5-round-stale row. New round-13 session births displace carries
-# from the END of this list (there are no refills to displace); any
-# displaced carry heads round-14 alongside agg_pandas_udaf_gmean.
-ROUND13_WINDOW = [
-    # the 2 round-13 staged rows (birth-window driver rows)
-    "dedup_semantic_incremental",
-    "dedup_ensemble_clusters",
-    # the 2 rows BORN in the round-13 session (displacing, per this
-    # plan's own rule, the two END carries vector_cosine_topk_fast_q200
-    # + window_trailing_30d_range — both r8-latest, they head round 14
-    # alongside agg_pandas_udaf_gmean): the seeded-quantizer transfer
-    # rows of VERDICT r12 item 3 — hash-oracle siblings for the
-    # rows-only ANN-probe and theta-set-algebra families. Both mirrored
-    # hash-green at sf0.001 AND sf0.01 on 2026-08-15.
-    "vector_ann_ivf_topk_seeded",
-    "sketch_theta_md5_overlap",
-    # 48 of the 49 round-8-latest carries (all but agg_pandas_udaf_gmean)
-    "agg_listagg_nations",
-    "corpus_token_budget_epochs",
-    "curation_compliance_source_filter",
-    "curation_dsir_importance_topk",
-    "curation_quality_keep_matrix",
-    "dedup_cluster_docs_star",
-    "dedup_incremental_newbatch",
-    "dedup_minhash_pairs",
-    "dedup_semantic_exact",
-    "dedup_semantic_pairs",
-    "dedup_simhash_pairs",
-    "dedup_simhash_pairs_md5",
-    "graph_clustering_topk",
-    "graph_kcore_copurchase",
-    "graph_minlabel_components",
-    "graph_pagerank_copurchase",
-    "graph_pagerank_weighted",
-    "graph_sssp_copurchase",
-    "graph_triangle_count",
-    "proj_unpivot_metrics",
-    "sketch_hll_group_users",
-    "sketch_hll_md5_users",
-    "sketch_kmv_overlap3",
-    "sketch_theta_user_overlap",
-    "streaming_dedup_watermark",
-    "streaming_hll_users",
-    "text_boilerplate_ngrams",
-    "text_charngram_familiarity",
-    "text_collapse_repeats",
-    "text_containment_neardup",
-    "text_contamination_check",
-    "text_fuzzy_token_pairs",
-    "text_gopher_rules",
-    "text_pii_scrub",
-    "text_prefix_filter_join",
-    "text_rolling_fingerprint",
-    "text_segment_udtf",
-    "vector_ann_ivf_exact",
-    "vector_ann_ivf_topk",
-    "vector_ann_ivfpq_exact",
-    "vector_ann_lsh_neardup",
-    "vector_ann_pq_topk",
-    "vector_centroid_by_group",
-    "vector_cosine_neardup",
-    "vector_cosine_topk_expr_q200",
-    "vector_cosine_topk_fast",
-    # (vector_cosine_topk_fast_q200 and window_trailing_30d_range were
-    # displaced by the two round-13 session births above; they head the
-    # round-14 window with agg_pandas_udaf_gmean)
-]
-
-# Round-12 rotation plan, MATERIALIZED at round-11 end (the same
-# one-reference-swap contract as every rotation: the round-12 session
-# points load_registry's ordering block at ROUND12_WINDOW and changes
-# nothing else). Composition: the 2 round-12 staged births
-# (corpus_bpe_train_merges — distributed BPE training, full oracle;
-# search_hybrid_rrf_ivf — rows-only ledgered, exact sibling
-# hash-green r11) + ALL 45 round-7-latest carries (after r12 no
-# latest row predates round 8) + 3 refills from the round-8 cohort
-# (module spread: dedup/graph/curation). New round-12 queries
-# displace refills from the END, never the carries. Pre-validated
-# end-to-end at sf0.01 under the driver-mirror comparator at round-11
-# end (2026-08-15): 48 hash-green + 2 ledgered rows-only
-# (search_hybrid_rrf_ivf, ml_score_batch — both with hash-green
-# exact/shadow siblings), 0 red. See SURVEY §17/§9ab/§9ac.
-# ROUND-12 SESSION AMENDMENT (2026-08-15): the displace rule fired —
-# the session's 2 new births (dedup_semantic_pairs_seeded,
-# corpus_bpe_pipeline, both hash-green at sf0.001+sf0.01) replaced
-# the graph/curation end refills (both r8-latest; they carry to r13).
-ROUND12_WINDOW = [
-    # the 2 round-12 staged rows (birth-window driver rows)
-    "corpus_bpe_train_merges",
-    "search_hybrid_rrf_ivf",
-    # the 2 rows BORN in the round-12 session (displacing, per this
-    # plan's own rule, the two end refills graph_pagerank_copurchase +
-    # curation_dsir_importance_topk — both r8-latest, they carry to
-    # r13): seeded-quantizer SemDeDup (the blocked path's first full
-    # hash oracle) and the composed BPE train->encode->pack->shard row.
-    # Both mirrored hash-green at sf0.001 AND sf0.01 on 2026-08-15.
-    "dedup_semantic_pairs_seeded",
-    "corpus_bpe_pipeline",
-    # ALL 45 round-7-latest carries — clears round-7 debt
-    "analytics_q16_supplier_cnt",
-    "analytics_q20_dominant_supplier",
-    "analytics_q21_waiting_supplier",
-    "analytics_q2_min_cost_supplier",
-    "corpus_clean_pipeline",
-    "corpus_pack_sequences",
-    "corpus_source_mixture",
-    "corpus_train_holdout_split",
-    "curation_url_canonical_hostdedup",
-    "dedup_cluster_exact",
-    "join_cross",
-    "join_full_outer",
-    "join_null_safe",
-    "ml_feature_assembly",
-    "ml_score_batch",
-    "multimodal_audio_spectrum",
-    "multimodal_audio_windows",
-    "multimodal_decode_real",
-    "multimodal_extract_features",
-    "multimodal_video_frames",
-    "proj_distinct",
-    "proj_filter_basic",
-    "proj_rename_cast",
-    "quality_data_validation",
-    "quality_length_quantile_audit",
-    "scalar_base64",
-    "scalar_conditional",
-    "scalar_datetime",
-    "scalar_hash_md5",
-    "scan_zorder_two_dim",
-    "scd2_user_event_history",
-    "setop_except",
-    "setop_intersect",
-    "setop_union_all",
-    "setop_union_by_name",
-    "sketch_heavy_hitter_tokens",
-    "streaming_corpus_clean",
-    "subquery_scalar_avg_diff",
-    "text_bm25_topk",
-    "text_token_stats",
-    "window_nth_lag_default",
-    "window_ntile",
-    "window_sliding_10m_5m",
-    "window_topk_recent",
-    "window_tumbling_hourly",
-    # 3 refills from the round-8-latest rows (watch priority + spread)
-    "dedup_minhash_pairs_md5",
-]
-
-# The round-11 window, MATERIALIZED at round-10 end and LIVE since
-# round 11: load_registry() orders by this list (the one-reference
-# swap VERDICT r10 item 1 asked for). Kept as data, not prose, so the
-# swap could not mistranscribe the validated composition. The FULL
-# post-swap 50-row composition — including the two round-11 births
-# search_mmr_rerank_ivf + vector_ivf_merge_topk, which displaced the
-# END refills scalar_hash_md5 + analytics_q2_min_cost_supplier — was
-# re-mirrored end-to-end at sf0.01 under the driver-mirror comparator
-# on 2026-08-15 (round-11 session): 45 hash-green + 5 ledgered
-# rows-only (search_mmr_rerank_ivf, agg_approx_distinct,
-# agg_percentile_approx, sample_stratified,
-# vector_kmeans_cluster_sizes — each with a hash-green exact
-# sibling), 0 red.
-ROUND11_WINDOW = [
-    # the 4 round-11 staged rows (birth-window driver rows)
-    "dedup_winnowing_pairs",
-    "search_hybrid_rrf",
-    "search_mmr_rerank",
-    "agg_incremental_mv_merge",
-    # the 2 NEW round-11 queries (birth-window rows): IVF-backed MMR
-    # candidate generation (VERDICT r10 item 3 — rows-only ledgered,
-    # exact sibling search_mmr_rerank fronts this same window) and the
-    # IVF inverted-file incremental merge (VERDICT r10 item 5 —
-    # full-probe conservation oracle). Displace the END refills
-    # scalar_hash_md5 + analytics_q2_min_cost_supplier per the rule.
-    "search_mmr_rerank_ivf",
-    "vector_ivf_merge_topk",
-    # ALL 39 round-6-latest carries — clears round-6 debt. The
-    # materialized plan listed 38: it missed range_join_time_binned,
-    # which ROUND10's own births had displaced from ROUND10's END
-    # refills (see the comment in ROUND10_WINDOW below) and thereby
-    # left r6-latest. Caught by recomputing the latest-row map in the
-    # round-11 session; added here per the carries-are-sacred rule,
-    # displacing one more END refill (dedup_cluster_exact).
-    "agg_approx_distinct",
-    "agg_cube",
-    "agg_percentile_approx",
-    "agg_rollup",
-    "analytics_skyline_parts",
-    "corpus_contamination_4gram",
-    "corpus_mix_rebalance",
-    "events_markov_transitions",
-    "events_streak_islands",
-    "graph_pagerank_bucketed",
-    "join_anti",
-    "join_asof_cogrouped",
-    "join_explode_ownership",
-    "join_left_composite",
-    "join_semi",
-    "market_rule_lift",
-    "multimodal_arrow_bytes",
-    "proj_derived_status",
-    "quality_repetition_signals",
-    "range_join_time_binned",
-    "sample_domain_quota",
-    "sample_stratified",
-    "scalar_regexp_replace",
-    "scalar_string_funcs",
-    "scalar_variant_props",
-    "scan_orc_pushdown",
-    "scan_runtime_bloom_join",
-    "sketch_cms_md5_tokens",
-    "streaming_markov_transitions",
-    "streaming_quota_admission",
-    "subquery_in_filter",
-    "text_lang_id",
-    "text_quality_score",
-    "text_token_count_bpe",
-    "timeseries_gapfill_daily",
-    "vector_cosine_topk",
-    "vector_kmeans_cluster_sizes",
-    "window_percentiles",
-    "window_rank_analytic",
-    # refills from the round-7-latest rows (watch priority + spread);
-    # originally 8, minus 3 END displacements (scalar_hash_md5 +
-    # analytics_q2_min_cost_supplier for the two r11 births,
-    # dedup_cluster_exact for the missed r6 carry above)
-    "corpus_dedup_keep_best",
-    "window_rolling_avg",
-    "text_chunk_dedup",
-    "corpus_shard_assignment",
-    "window_latest_per_key",
-]
-
-ROUND10_WINDOW = [
-    # the 2 staged round-10 scorer audits (birth-window rows)
-    "curation_scorer_oov_audit",
-    "curation_scorer_length_bias",
-    # the 2 NEW round-10 queries (birth-window rows): cross-snapshot
-    # dedup index merge with the full-corpus conservation oracle, and
-    # the §9u entity-share audit gate — displacing the END refills
-    # (subquery_in_filter, range_join_time_binned) per the rule
-    "dedup_index_merge_pairs_md5",
-    "quality_entity_share_audit",
-    # ALL 35 round-5-latest carries — clears round-5 debt
-    "agg_corr_value_hour",
-    "agg_distinct",
-    "agg_equidepth_deciles",
-    "agg_filtered_count",
-    "agg_gini_value",
-    "agg_group_q1",
-    "agg_pivot_event_types",
-    "agg_trend_slope_by_type",
-    "agg_variance_manual",
-    "agg_weighted_median_by_source",
-    "analytics_q10_returns",
-    "analytics_q11_share",
-    "analytics_q12_priority_mix",
-    "analytics_q13_custdist",
-    "analytics_q14_promo",
-    "analytics_q15_top_supplier",
-    "analytics_q17_small_qty",
-    "analytics_q18_large_orders",
-    "analytics_q19_disjunctive",
-    "analytics_q22_dormant",
-    "analytics_q4_exists_priority",
-    "analytics_q5_region_volume",
-    "analytics_q6_selective",
-    "analytics_q7_volume",
-    "analytics_q8_market_share",
-    "analytics_q9_profit",
-    "corpus_filter_funnel",
-    "corpus_vocab_topk",
-    "events_pareto_user_deciles",
-    "events_weekday_profile",
-    "join_lookup_latest_state",
-    "quality_independence_residuals",
-    "scalar_interval",
-    "timeseries_ohlc_hourly",
-    "timeseries_twap_per_user",
-    # 13 refills from the 50 round-6-latest rows
-    "flagship_dashboard",
-    "flagship_stats",
-    "join_asof",
-    "join_inner_broadcast",
-    "window_session_30m",
-    "text_exact_dedup",
-    "text_ngram_jaccard",
-    "scalar_json",
-    "agg_median",
-    "sample_seeded",
-    "dedup_cluster_docs",
-]
-
-#
-# Round-9 rotation (VERDICT r8 item 2): the 2 NEW round-9 queries
-# (birth-window rows), then ALL 33 round-4-latest carries — after this
-# window no query's latest driver row predates round 5 and round-4
-# debt is CLEARED — then 15 refills from the 50 round-5-latest rows,
-# chosen for watch-list priority (anomaly_daily_mad is a VERDICT r8
-# weak mark; vector_ann_ivfpq_topk's warm-set changed this round) and
-# module spread. The remaining 35 r5 rows are the round-10 carry
-# (35 r5 + 15 r6 refills clears round-5 debt next round).
-ROUND9_WINDOW = [
-    # the 2 NEW round-9 curation gates (queries/round9.py)
-    "curation_quality_linear_scorer",
-    "curation_compliance_span_bridge",
-    # ALL 33 round-4-latest carries — clears round-4 debt
-    "agg_bucketed_no_shuffle",
-    "agg_collect_sorted",
-    "agg_exact_median_by_type",
-    "agg_histogram_value",
-    "agg_mode_event_type_daily",
-    "agg_percentile_bands",
-    "agg_time_grain_rollup",
-    "anomaly_daily_zscore",
-    "corpus_bigram_topk",
-    "corpus_bpe_encode",
-    "corpus_dedup_rate_by_source",
-    "corpus_overlap_chunks",
-    "corpus_source_overlap",
-    "events_dau_wau_stickiness",
-    "events_funnel_conversion",
-    "events_retention_cohort",
-    "join_asof_forward",
-    "join_bucketed_colocated",
-    "join_fuzzy_levenshtein",
-    "join_interval_overlap",
-    "market_basket_pairs",
-    "ml_kfold_assignment",
-    "profile_table_stats",
-    "quality_rank_normalize",
-    "sample_stratified_exact_k",
-    "sample_weighted_systematic",
-    "scalar_array_funcs",
-    "scan_dpp_partitioned_join",
-    "scd2_incremental_merge",
-    "setop_except_all",
-    "setop_intersect_all",
-    "sketch_kmv_distinct_users",
-    "text_novelty_score",
-    # 15 refills from the 50 round-5-latest rows
-    "anomaly_daily_mad",
-    "vector_ann_ivfpq_topk",
-    "dedup_pipeline_blocked_verify",
-    "join_salted_skew",
-    "join_posexplode",
-    "agg_latest_per_key",
-    "agg_grouping_sets",
-    "scalar_string_advanced",
-    "scan_time_range_pruned",
-    "timeseries_max_drawdown",
-    "events_session_conversion",
-    "quality_benford_digits",
-    "corpus_tfidf_topterm",
-    "hierarchy_rollup_to_root",
-    "analytics_q3_shipping",
-]
+def driver_order(
+    names: Iterable[str], ledgers: Iterable[str | Path]
+) -> list[str]:
+    """``names`` sorted by (ledger key, name): never-checked and red
+    queries (key -1) first, then the stalest passes."""
+    keys = ledger_keys(ledgers)
+    return sorted(names, key=lambda n: (keys.get(n, -1), n))
 
 
 # Why each rows-only (oracle=None) query CANNOT be value-hash-checked
@@ -1296,68 +187,11 @@ ROWS_ONLY_RATIONALE: dict[str, str] = {
 
 def load_registry() -> dict[str, QuerySpec]:
     """Import all query modules (side effect: they register) and return
-    the registry reordered so :data:`ROUND16_WINDOW` comes first.
+    the registry in :func:`driver_order` over the committed ledgers.
 
-    History: round 1 covered aggregations/analytics/analytics_tpch/
-    corpus/dedup_similarity/extensions (50); round 2 fronted the other
-    50 of that era; round 3 fronted round3_additions + the round-2
-    modules (CORRECTNESS_r03: 38 green, 12 rows-only, 0 red).  Round 4
-    fronted the staging backlog + the two r2-red fixes + three oracle
-    upgrades (CORRECTNESS_r04: 50/50 green).  Round 5 fronted the 16
-    carried never-checked queries + the new composition row + the 33
-    stalest r1 rows (CORRECTNESS_r05: 49 green + 1 rows-only by
-    design).  Round 6 fronts the 4 round-5 staged rows + the 13 new
-    round-6 queries + all 11 round-1-latest rows + 22 of the 47
-    round-2-latest rows (CORRECTNESS_r06: 44 green + 6 rows-only by
-    design).  Round 7 fronts the 2 new curation gates + ALL 25
-    round-2-latest carries + 23 r3 refills (CORRECTNESS_r07: 49 green
-    + 1 rows-only by design) — after that window no query's latest
-    driver row predates round 3.  Round 8 fronts the 5 staged rows +
-    the 2 new compliance/keep-matrix gates + the 3 artifact-refactored
-    graph queries + ALL 26 round-3-latest carries + 14 r4 refills —
-    after this window no query's latest driver row predates round 4
-    and the never-checked count is 0 (CORRECTNESS_r08: 39 green + 11
-    rows-only by design).  Round 9 fronts the 2 new round-9 curation
-    gates + ALL 33 round-4-latest carries + 15 r5 refills — after this
-    window no query's latest driver row predates round 5.  Round 10
-    fronts the 2 staged scorer audits (birth-window rows — the only
-    never-driver-checked queries) + ALL 35 round-5-latest carries +
-    r6 refills — after this window no query's latest driver row
-    predates round 6 and the never-checked count is back to 0.
-    Round 11 fronted the 2 r11 births (MMR-over-IVF, frozen-centroid
-    IVF merge) + ALL 39 round-6-latest carries + 9 r7 refills
-    (CORRECTNESS_r11: 45 green + 5 rows-only by design) — after that
-    window no latest row predates round 7.  Round 12 fronts the 2 r12
-    births (distributed BPE training; RRF-over-IVF hybrid) + the 2
-    rows born in the r12 session (seeded SemDeDup; composed BPE
-    pipeline — they displaced 2 end refills per the plan's rule) +
-    ALL 45 round-7-latest carries + 1 r8 refill — after this window
-    no latest row predates round 8.  Round 13 fronts the 2 r13 births
-    (incremental semantic dedup; ensemble dedup clusters) + 48 of the
-    49 round-8-latest carries (agg_pandas_udaf_gmean is the documented
-    hold-over heading round 14) — after this window no latest row
-    predates round 9.  Round 14 fronts the 3 r14 staged births
-    (zone-map range agg; leakage-safe splits; delete-rewrite fetch) +
-    the 3 round-8-latest hold-overs + 44 round-9-latest carries —
-    after this window no latest row predates round 10.  Round 15
-    fronts the 12 never-driver-checked births (4 r14-session rows +
-    the 8 r13-session staged rows, all pre-mirrored hash-green at
-    sf0.001 AND sf0.01) + the 6 round-9-latest hold-overs + 32
-    round-10-latest carries — after this window no latest row
-    predates round 10 and the never-checked count is back to 0.
-    Round 16 fronts the 3 r15-session births (the BQ sign-bit ANN
-    tier: cell-pruned topk, fenced streaming probe, persisted merged
-    inverted file — all pre-mirrored hash-green at sf0.001 AND
-    sf0.01) + ALL 18 round-10-latest rows (clears round-10 debt) +
-    29 round-11-latest carries — after this window no latest row
-    predates round 11 and the never-checked count is back to 0.
-
-    NEXT FLIP (round-17 session, do this FIRST): switch the two
-    ROUND16_WINDOW mentions below to ROUND17_WINDOW — it fronts the
-    6 r16-session births (BQ streaming absorb; the 3 delete-lifecycle
-    stages; filtered ANN; tombstone-aware compact — all mirrored
-    hash-green at both SFs this session) + ALL 21 round-11-latest
-    rows (clears round-11 debt) + 23 round-12-latest carries.
+    The driver checks the first 50 entries each round, so that window
+    always fronts the queries it has never checked or last saw red,
+    then those whose latest passing row is oldest.
     """
     from cognitive_score_bigdata_spark.queries import (  # noqa: F401
         aggregations,
@@ -1425,15 +259,8 @@ def load_registry() -> dict[str, QuerySpec]:
         windows_time,
     )
 
-    missing = [n for n in ROUND16_WINDOW if n not in REGISTRY]
-    if missing:
-        raise RuntimeError(f"ROUND16_WINDOW names not registered: {missing}")
-    from dataclasses import replace
-
     for n, why in ROWS_ONLY_RATIONALE.items():
         spec = REGISTRY.get(n)
         if spec is not None and spec.oracle is None and why not in spec.doc:
             REGISTRY[n] = replace(spec, doc=f"{spec.doc} [rows-only: {why}]")
-    ordered = {n: REGISTRY[n] for n in ROUND16_WINDOW}
-    ordered.update((n, s) for n, s in REGISTRY.items() if n not in ordered)
-    return ordered
+    return {n: REGISTRY[n] for n in driver_order(REGISTRY, committed_ledgers())}

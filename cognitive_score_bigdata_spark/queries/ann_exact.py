@@ -4,8 +4,7 @@
 result is exactly brute-force top-k — which means the ENTIRE IVF
 machinery (KMeans coarse quantizer, cell assignment, probe pruning,
 per-cell candidate scoring, final merge) earns a DuckDB hash-match row,
-not just the recall-vs-exact unit test. (Windowing is name-based
-since round 4: see ROUND4_WINDOW in queries/__init__.py.)
+not just the recall-vs-exact unit test.
 """
 
 from __future__ import annotations

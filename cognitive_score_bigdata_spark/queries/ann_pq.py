@@ -1,8 +1,7 @@
 """Registry entry for product-quantized ANN (rows-only: ADC scores are
 approximations with no SQL-expressible form; recall-vs-exact is pinned
-by tests/test_pq.py). Windowing is name-based since round 4 (see
-ROUND4_WINDOW); the exact-mode sibling vector_ann_ivfpq_exact carries
-the machinery's hash-match row."""
+by tests/test_pq.py). The exact-mode sibling vector_ann_ivfpq_exact
+carries the machinery's hash-match row."""
 
 from __future__ import annotations
 

@@ -2,11 +2,10 @@
 time-series patterns.
 
 Built in round 3 after that round's driver window froze; the round-4
-rotation fronted them (ROUND4_WINDOW in ``queries/__init__``). Every
-query here is oracle-checked. In round 16 the module was split by
-domain (VERDICT r15 item 7) — the graph family moved to
-``queries/graphs.py``, the md5 minhash/simhash pair generators to
-``queries/dedup_md5.py``, the md5 sketches to
+driver window fronted them. Every query here is oracle-checked. In
+round 16 the module was split by domain (VERDICT r15 item 7) — the
+graph family moved to ``queries/graphs.py``, the md5 minhash/simhash
+pair generators to ``queries/dedup_md5.py``, the md5 sketches to
 ``queries/sketches_md5.py``, the statistical/event profiles to
 ``queries/stats_events.py``, and the text similarity joins to
 ``queries/textjoins.py`` — registry keys unchanged throughout.

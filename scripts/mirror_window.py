@@ -1,7 +1,8 @@
 #!/usr/bin/env python
-"""Mirror a driver CORRECTNESS window locally: run every query of
-ROUND{N}_WINDOW through the driver-equivalent comparator (Spark result
-vs DuckDB oracle, `_normalize` canonical form — row count + schema +
+"""Mirror the next driver CORRECTNESS window locally: run the first 50
+entries of ``load_registry()`` (the window the driver checks next)
+through the driver-equivalent comparator (Spark result vs DuckDB
+oracle, `_normalize` canonical form — row count + schema +
 order-insensitive values) at a chosen SF and print the green /
 rows-only / red split.
 
@@ -10,11 +11,9 @@ This is the strongest per-round gate reproduced outside the driver:
 behavior-preservation proof SURVEY records (r12-continuation re-ran it
 for BOTH windows after every manifest-path change).
 
-Run with cwd=/root/repo (worker pandas UDFs import the package):
+Run from the repo root (worker pandas UDFs import the package):
 
-    python scripts/mirror_window.py                 # ROUND12_WINDOW, sf0.01
-    python scripts/mirror_window.py 13              # ROUND13_WINDOW
-    python scripts/mirror_window.py 13 /root/testdata/sf0.001
+    python scripts/mirror_window.py [SF_DIR]        # default: sf0.01 testdata
 
 Exit code 1 if any row is RED/ERR.
 """
@@ -35,16 +34,10 @@ from tests.conftest import _normalize  # noqa: E402
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:]]
-    round_no = next((a for a in args if a.isdigit()), "12")
-    sf_dir = next(
-        (a for a in args if not a.isdigit()), "/root/testdata/sf0.01"
-    )
-    window = getattr(q, f"ROUND{round_no}_WINDOW")
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     reg = q.load_registry()
-    spark = get_spark(
-        f"mirror-w{round_no}", master="local[16]", shuffle_partitions=16
-    )
+    window = list(reg)[:50]
+    spark = get_spark("mirror-window", master="local[16]", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
