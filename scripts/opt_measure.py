@@ -1,10 +1,11 @@
 #!/usr/bin/env python
 """Isolated per-query measurement for the optimization rounds.
 
-Times named registry queries through the noop sink (guide §1.4) in one
-warm session, mirroring bench.py methodology (System.gc() before each
-timed run, artifact warm-up first so timed rows measure probes, not
-builds). Optionally dumps .explain("formatted") to plans/<tag>/.
+Times named registry queries through bench.py's ``materialize`` (the
+noop sink, imported from ``bench``) in one warm session, mirroring
+bench.py methodology (System.gc() before each timed run, artifact
+warm-up first so timed rows measure probes, not builds). Optionally
+dumps .explain("formatted") to plans/<tag>/.
 
     python scripts/opt_measure.py [--sf DIR] [--reps N] [--explain TAG]
         query1 query2 ...
@@ -22,6 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import materialize  # noqa: E402
 from cognitive_score_bigdata_spark.queries import load_registry  # noqa: E402
 from cognitive_score_bigdata_spark.session import get_spark  # noqa: E402
 
@@ -44,9 +46,6 @@ def main() -> None:
     registry = load_registry()
     spark = get_spark("opt-measure")
     spark.sparkContext.setLogLevel("ERROR")
-
-    def materialize(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
 
     # Session warm-up: JIT + Arrow worker pool, like bench.py.
     materialize(registry["flagship_stats"].fn(spark, args.sf))

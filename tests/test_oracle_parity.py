@@ -18,15 +18,19 @@ REGISTRY = load_registry()
 WITH_ORACLE = sorted(n for n, s in REGISTRY.items() if s.oracle)
 NO_ORACLE = sorted(n for n, s in REGISTRY.items() if not s.oracle)
 LEDGER_KEYS = ledger_keys(committed_ledgers())
+# One-query-per-family parity smoke: in each family (the name's prefix
+# before the first "_"), the alphabetically first name with an oracle.
+FAMILY_SMOKE = set({n.split("_")[0]: n for n in reversed(WITH_ORACLE)}.values())
 
 
 # A query whose latest driver row passed runs with the sweep; one the
-# driver has never checked, or last saw red, runs by default too.
+# driver has never checked, or last saw red, runs by default too, and
+# so does the family smoke.
 @pytest.mark.parametrize(
     "name",
     [
         pytest.param(n, marks=pytest.mark.oracle_sweep)
-        if LEDGER_KEYS.get(n, -1) >= 0
+        if LEDGER_KEYS.get(n, -1) >= 0 and n not in FAMILY_SMOKE
         else n
         for n in WITH_ORACLE
     ],
