@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+from pyspark.sql.types import StructField, StructType
 
 from cognitive_score_bigdata_spark.io import fan_out
 
@@ -453,109 +454,94 @@ def simhash_candidate_pairs(
     )
 
 
+LOCAL_FINISH_EDGES = 2_000_000
+
+
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 20,
+    max_iter: int = 30,
     local_finish_edges: int | None = None,
 ) -> DataFrame:
     """Near-dup clusters: label every node with the MIN id reachable
     through the pair graph — the canonical "pick one survivor per
     duplicate cluster" step after candidate generation.
 
-    Plain iterative min-label propagation: each round every node adopts
-    the smallest label among itself and its neighbors; converged when no
-    label changes. Rounds needed = graph diameter (near-dup clusters are
-    dense and shallow, typically 2-4). Each round is one shuffle; lineage
-    is cut with localCheckpoint so the plan doesn't grow unboundedly.
-    For adversarially long chains (diameter ≫ 10) use
-    :func:`connected_components_star`, which converges in O(log d)
-    rounds via star contraction.
-
-    Hybrid local finish (same guard as the star variant, default
-    ``LOCAL_FINISH_EDGES`` = 2M edges ≈ 32 MB driver): when the
-    DEDUPLICATED edge set fits the driver, a union-find labels it in one
-    collect instead of d scheduled rounds — identical output (pinned by
-    the union-find parity tests), and the distributed path engages
-    automatically for graphs that don't fit.
-
     ``pairs`` needs columns (id_a, id_b); ``nodes`` provides one row per
-    ``id_col`` so singletons keep their own id as cluster label.
+    ``id_col`` so singletons keep their own id as cluster label. Returns
+    (id_col, cluster_id).
+
+    Hybrid local finish (the GraphX/production pattern): while the
+    deduplicated symmetric edge set is larger than ``local_finish_edges``
+    (default ``LOCAL_FINISH_EDGES`` = 2M edges ≈ 32 MB driver), each
+    round runs one large-star and one small-star contraction (Kiveris et
+    al., "Connected Components in MapReduce and Beyond", SoCC 2014):
+    O(log d) rounds for a diameter-d component, so a 10^6-long chain
+    needs ~20 rounds, not 10^6. Contraction shrinks the graph
+    geometrically and preserves connectivity (hence min-id labels), so
+    as soon as the remainder fits the driver, a union-find over the
+    collected half-edges labels it in one collect instead of the long
+    tail of tiny distributed rounds. Near-dup graphs that already fit
+    never run a contraction round.
+
+    Raises ``RuntimeError`` when ``max_iter`` rounds end with neither a
+    fixpoint nor a local finish: the labels would not be the components.
     """
     if local_finish_edges is None:
         local_finish_edges = LOCAL_FINISH_EDGES
-    edges = (
+    sym = _symmetric(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(
-                F.col("id_b").alias("src"), F.col("id_a").alias("dst")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if edges.count() <= local_finish_edges:  # cheap: edges checkpointed
-        # Arrow transfer, not row collect: py4j Row conversion measured
-        # 8x slower (1.33 s vs 0.17 s at 300k edges, round 4)
-        half = edges.filter(F.col("src") < F.col("dst")).toPandas()
-        lab = _local_min_labels(
-            list(zip(half["src"].tolist(), half["dst"].tolist()))
-        )
-        out = nodes.select(F.col(id_col).alias("node"))
-        if lab:
-            lab_df = nodes.sparkSession.createDataFrame(
-                list(lab.items()), ["node", "label"]
-            )
-            return out.join(F.broadcast(lab_df), "node", "left").select(
-                F.col("node").alias(id_col),
-                F.coalesce("label", "node").alias("cluster_id"),
-            )
-        return out.select(
-            F.col("node").alias(id_col), F.col("node").alias("cluster_id")
-        )
-    labels = nodes.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("label")
     ).localCheckpoint(eager=True)
-
+    prev_sig = None
     for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
+        sig = tuple(
+            sym.agg(F.count(F.lit(1)), F.sum("src"), F.sum("dst")).collect()[0]
         )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
+        if sig[0] <= local_finish_edges:
+            # Arrow transfer, not row collect: py4j Row conversion
+            # measured 8x slower (1.33 s vs 0.17 s at 300k edges)
+            half = sym.filter(F.col("src") < F.col("dst")).toPandas()
+            lab = _local_min_labels(
+                list(zip(half["src"].tolist(), half["dst"].tolist()))
             )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+            t = sym.schema["src"].dataType
+            labels = F.broadcast(
+                nodes.sparkSession.createDataFrame(
+                    list(lab.items()),
+                    StructType(
+                        [StructField("node", t), StructField("label", t)]
+                    ),
+                )
+            )
             break
-    return labels.select(
-        F.col("node").alias(id_col), F.col("label").alias("cluster_id")
+        if sig == prev_sig:
+            # fixpoint: every component is a star around its min id
+            labels = sym.groupBy(F.col("src").alias("node")).agg(
+                F.min("dst").alias("label")
+            )
+            break
+        prev_sig = sig
+        sym = _star_round(_star_round(sym, large=True), large=False)
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {max_iter} "
+            "contraction rounds; raise max_iter or local_finish_edges"
+        )
+    return (
+        nodes.select(F.col(id_col).alias("node"))
+        .join(labels, "node", "left")
+        .select(
+            F.col("node").alias(id_col),
+            F.least("node", F.coalesce("label", "node")).alias("cluster_id"),
+        )
     )
-
-
-LOCAL_FINISH_EDGES = 2_000_000
 
 
 def _local_min_labels(edge_rows: list[tuple]) -> dict:
     """Union-find with min-id labels over a driver-collected edge list:
     node → smallest id in its component. The local finisher for
-    :func:`connected_components_star`."""
+    :func:`connected_components`."""
     parent: dict = {}
 
     def find(x):
@@ -616,75 +602,3 @@ def _star_round(sym: DataFrame, large: bool) -> DataFrame:
             )
         )
     return _symmetric(moved).localCheckpoint(eager=True)
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 30,
-    local_finish_edges: int = LOCAL_FINISH_EDGES,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014): converges in O(log d) rounds versus min-label
-    propagation's O(d), so a 10^6-long chain needs ~20 rounds, not 10^6.
-
-    Same contract as :func:`connected_components`: (id_col, cluster_id)
-    with cluster_id = MIN node id of the component; singletons label
-    themselves. Use this variant when candidate graphs may contain long
-    chains (transitive near-dup bridges); the plain propagation is fine
-    for the shallow dense clusters LSH typically emits.
-    """
-    sym = _symmetric(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    ).localCheckpoint(eager=True)
-
-    centers = None
-    prev_sig = None
-    for i in range(max_iter):
-        sig = tuple(
-            sym.agg(F.count(F.lit(1)), F.sum("src"), F.sum("dst")).collect()[0]
-        )
-        # Hybrid local finish (the GraphX/production pattern): star
-        # contraction shrinks the graph geometrically, so within a few
-        # rounds the remainder fits on the driver — at which point a
-        # union-find over the collected edges replaces the long tail of
-        # tiny distributed rounds (each of which is 3+ scheduled jobs).
-        # Connectivity (hence min-id labels) is invariant under
-        # contraction, so the result is identical; the threshold bounds
-        # driver memory at ~16 bytes/edge.
-        if local_finish_edges and sig[0] <= local_finish_edges:
-            pdf = sym.toPandas()  # Arrow, not py4j rows (8x, see above)
-            labels = _local_min_labels(
-                list(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
-            )
-            if labels:
-                centers = nodes.sparkSession.createDataFrame(
-                    list(labels.items()), sym.select("src").schema.add(
-                        "mn", sym.schema["src"].dataType
-                    )
-                )
-            else:
-                centers = sym.select(
-                    "src", F.col("dst").alias("mn")
-                ).limit(0)
-            break
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-        sym = _star_round(sym, large=True)
-        sym = _star_round(sym, large=False)
-
-    if centers is None:
-        centers = sym.groupBy("src").agg(F.min("dst").alias("mn"))
-    return (
-        nodes.select(F.col(id_col).alias("node"))
-        .join(centers, F.col("node") == centers.src, "left")
-        .select(
-            F.col("node").alias(id_col),
-            F.least(
-                F.col("node"), F.coalesce("mn", F.col("node"))
-            ).alias("cluster_id"),
-        )
-    )

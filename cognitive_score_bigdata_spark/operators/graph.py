@@ -1,22 +1,28 @@
-"""Distributed graph operators: fixed-point PageRank, triangle counting.
+"""Distributed graph operators: fixed-point PageRank, the min
+fixpoints (connected components, shortest paths), triangle counting.
 
 DataFrame-level APIs over an edge list (``src``, ``dst``) so the
 algorithms are testable on synthetic graphs with known closed-form
 answers (K4, paths, stars — see ``tests/test_graph_ops.py``) and
-reusable beyond the co-purchase queries in
-``queries/round4_staging2.py``.
+reusable beyond the co-purchase queries in ``queries/graphs.py``.
 
-Design notes (both operators):
+Design notes:
 
 - **Exact integer arithmetic.** PageRank ranks are BIGINT micro-units
-  with ×17 integer-div 20·outdeg damping; triangle counting is pure
-  counting. No floats anywhere, so results are bit-identical across
-  engines, partitionings, and scale factors — which is what lets the
-  registry queries carry real DuckDB oracles for algorithms that are
-  usually "approximately reproducible" at best.
-- **Skew posture.** PageRank broadcasts the rank vector (one row per
-  node) into the edge list — edges never shuffle inside the loop, only
-  the dst-keyed contribution aggregate does. Triangle counting uses
+  with ×17 integer-div 20·outdeg damping; the min fixpoints take MINs
+  of integer labels and sums of integer weights; triangle counting is
+  pure counting. No floats anywhere, so results are bit-identical
+  across engines, partitionings, and scale factors — which is what
+  lets the registry queries carry real DuckDB oracles for algorithms
+  that are usually "approximately reproducible" at best.
+- **One min loop.** :func:`min_propagate` is the only min fixpoint:
+  :func:`minlabel_components` and :func:`sssp_fixed_rounds` only build
+  its self-looped edge table (:func:`self_looped_edges`) and its seed.
+  PageRank keeps its own loop — a sum over every in-edge, where every
+  vertex changes every round.
+- **Skew posture.** The fixpoints broadcast the |V|-row state (ranks,
+  labels, distances) into the edge list — edges never shuffle inside
+  the loop, only the dst-keyed aggregate does. Triangle counting uses
   degree orientation: ranking nodes by (degree, id) and directing every
   edge low→high bounds out-degree at O(√E), so a celebrity node
   generates zero wedges from its low side instead of deg² of them.
@@ -29,16 +35,15 @@ Design notes (both operators):
   iteration's state join reads the bucketed scan with NO edge-side
   Exchange and shuffles only the |V|-row rank/dist/label table into
   the bucket partitioning. Map-side partial aggregation keeps the
-  contribution shuffle |V|-bounded per partition too, so total
+  aggregate's shuffle |V|-bounded per partition too, so total
   per-iteration shuffle volume is O(|V|·P), independent of |E|. AQE
   skew-split handles supernode buckets. Plan-pinned in
   ``tests/test_plans.py`` with broadcast disabled; cross-mode parity
   pinned in ``tests/test_graph_ops.py``.
 
-Reference parity note: the reference (`/root/reference/src/backend/`)
-has no graph surface; these belong to the brief's large-scale-pipeline
-extension next to dedup clustering (`operators/dedup.py`), which
-already ships the connected-components side of the graph story.
+The near-duplicate clustering in ``operators/dedup.py`` is the
+data-dependent counterpart: star contraction to a fixpoint, finished
+by a driver-side union-find.
 """
 
 from __future__ import annotations
@@ -335,74 +340,99 @@ def triangle_count(
     )
 
 
+def min_propagate(
+    edges: DataFrame,
+    init: DataFrame,
+    n_iters: int,
+    edge_buckets: int | None = None,
+) -> DataFrame:
+    """Recursive min-aggregate over a fixed number of rounds: the one
+    loop behind :func:`minlabel_components` and
+    :func:`sssp_fixed_rounds` (RaSQL's recursive MIN; Pregel's
+    message-then-min round).
+
+    ``init`` is the seed state ``(node, <value>)``. Each round joins the
+    state into ``edges`` on ``src`` and takes, per ``dst``, the MIN of
+    the source's value, plus the edge's ``w`` when ``edges`` carries a
+    ``w`` column. ``edges`` is the :func:`self_looped_edges` table, so
+    every node's own value takes part in its min and a value never gets
+    worse; a node no path reaches within ``n_iters`` hops is absent.
+    Returns the state after ``n_iters`` rounds, with ``init``'s columns.
+
+    Per round the |V|-row state is broadcast into the edge table and one
+    min-aggregate shuffles on ``dst``; edges never move. The state is
+    read once per round, so the unrolled plan grows linearly, not
+    2^k-fold. ``edge_buckets=N`` (``edges`` then being the bucketed
+    scan): the state sort-merge joins INTO the bucket partitioning
+    instead — the >2M-node layout, see :func:`pagerank_fixed_point`.
+    """
+    val = init.columns[1]
+    msg = F.col(val) + F.col("w") if "w" in edges.columns else F.col(val)
+    state = init
+    for _ in range(n_iters):
+        side = F.broadcast(state) if edge_buckets is None else state
+        state = (
+            edges.join(side, state.node == edges.src)
+            .groupBy("dst")
+            .agg(F.min(msg).alias(val))
+            .select(F.col("dst").alias("node"), val)
+        )
+    return state
+
+
+def self_looped_edges(
+    edges: DataFrame, edge_buckets: int | None = None
+) -> DataFrame:
+    """The loop-invariant table of :func:`min_propagate`: ``edges`` plus
+    one self-loop per ``src`` node, of weight 0 when ``edges`` has a
+    ``w`` column — the loop that keeps a node's current value in its
+    min. Checkpointed lazily for the broadcast join; with
+    ``edge_buckets=N``, written once bucketed on ``src``
+    (:func:`bucketize_edges`)."""
+    loops = edges.select("src").distinct().select(
+        "src", F.col("src").alias("dst")
+    )
+    if "w" in edges.columns:
+        zero = F.lit(0).cast(edges.schema["w"].dataType)
+        loops = loops.withColumn("w", zero)
+    looped = edges.unionAll(loops)
+    if edge_buckets is None:
+        return looped.localCheckpoint(eager=False)
+    return bucketize_edges(looped, "src", edge_buckets)
+
+
 def minlabel_components(
     edges: DataFrame,
     n_iters: int = 8,
     edge_buckets: int | None = None,
-    prepared: bool = False,
 ) -> DataFrame:
     """Connected components by min-label propagation, fixed iterations.
 
     ``edges`` needs ``src``/``dst`` with each undirected edge in ONE
-    direction; self-loops and symmetrization are added here. Every node
+    direction; symmetrization and self-loops are added here. Every node
     starts labeled with its own id; each round every node takes the
-    minimum label among itself and its neighbors. After ``n_iters``
-    rounds a node's label is the minimum node id within ``n_iters``
-    hops, so the result equals true connected components once
-    ``n_iters`` reaches the label-propagation diameter (distance from
-    each node to its component's minimum). Unlike the star-contraction
-    operator in ``operators/dedup.py`` (O(log d) rounds, rows-only
-    check), the fixed iteration count makes the output a pure function
-    of the input — which is what lets the registry query carry an exact
-    DuckDB oracle for a graph algorithm. Per round: one broadcast of
-    the |V|-row label vector into the edge list + one min-aggregate
-    shuffle on dst — the same Pregel shape as PageRank above.
-    ``edge_buckets=N`` switches to the bucketed-edge layout for the
-    >2M-node regime (see :func:`pagerank_fixed_point`).
-    ``prepared=True``: ``edges`` is already the symmetrized,
-    self-looped edge table (and bucketed when ``edge_buckets`` is set)
-    — the session-cached-artifact path for repeated fixpoints, same
-    economics as :func:`pagerank_fixed_point`'s prepared mode.
+    minimum label among itself and its neighbors (:func:`min_propagate`).
+    After ``n_iters`` rounds a node's label is the minimum node id
+    within ``n_iters`` hops, so the result equals true connected
+    components once ``n_iters`` reaches the label-propagation diameter
+    (distance from each node to its component's minimum). Unlike the
+    star-contraction operator in ``operators/dedup.py`` (O(log d)
+    rounds, data-dependent), the fixed iteration count makes the output
+    a pure function of the input — which is what lets the registry
+    query carry an exact DuckDB oracle for a graph algorithm.
+    Returns (node, lab).
     """
-    if prepared:
-        withself = edges
-    else:
-        sym = edges.select("src", "dst").unionAll(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        nodes = sym.select(F.col("src").alias("n")).distinct()
-        withself = sym.unionAll(
-            nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"))
-        )
-        if edge_buckets is None:
-            withself = withself.localCheckpoint(eager=False)
-        else:
-            withself = bucketize_edges(withself, "src", edge_buckets)
-
-    if edge_buckets is None and not prepared:
-        labels = nodes.select(
-            F.col("n").alias("node"), F.col("n").alias("lab")
-        )
-    else:
-        # seed labels off the edge table itself (self-loops guarantee
-        # every node appears as src); on a bucketed scan the distinct
-        # rides the bucket partitioning — zero-exchange
-        labels = (
-            withself.select("src")
-            .distinct()
-            .select(F.col("src").alias("node"), F.col("src").alias("lab"))
-        )
-    for _ in range(n_iters):
-        lab_side = F.broadcast(labels) if edge_buckets is None else labels
-        labels = (
-            withself.join(lab_side, labels.node == withself.src)
-            .groupBy("dst")
-            .agg(F.min("lab").alias("lab"))
-            .select(F.col("dst").alias("node"), "lab")
-        )
-    return labels
+    e = edges.select("src", "dst")
+    sym = e.unionAll(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    withself = self_looped_edges(sym, edge_buckets)
+    # self-loops make every node a src; on a bucketed scan the distinct
+    # rides the bucket partitioning — zero-exchange
+    labels = withself.select("src").distinct().select(
+        F.col("src").alias("node"), F.col("src").alias("lab")
+    )
+    return min_propagate(withself, labels, n_iters, edge_buckets)
 
 
 def sssp_fixed_rounds(
@@ -417,34 +447,15 @@ def sssp_fixed_rounds(
     (node, dist) for every node reached within ``n_iters`` hops; with
     integer weights and a fixed round count the output is a pure
     function of the input (exactly oracle-able, like
-    :func:`minlabel_components`). Per round: frontier distances join
-    the edge list on src (broadcast by default; bucketed-edge SMJ with
-    ``edge_buckets=N`` for the >2M-node regime), then a min-aggregate
-    merges relaxations with the kept distances. ``dist`` is referenced
-    twice per round (relax join + keep-old union), so each round cuts
-    lineage with localCheckpoint — without it the executed plan inlines
-    2^k-fold (SURVEY §9h: 63 broadcast joins for 6 rounds).
+    :func:`minlabel_components`). The rounds are :func:`min_propagate`'s:
+    a weight-0 self-loop on every node keeps its old distance, so no
+    keep-old union is needed.
     """
-    if edge_buckets is None:
-        es = es.localCheckpoint(eager=False)  # relaxed against every round
-    else:
-        es = bucketize_edges(es, "src", edge_buckets)
-    src0 = es.groupBy().agg(F.min("src").alias("node"))
-    dist = src0.select("node", F.lit(0).cast("bigint").alias("dist"))
-    for _ in range(n_iters):
-        dist_side = F.broadcast(dist) if edge_buckets is None else dist
-        relax = es.join(dist_side, dist.node == es.src).select(
-            F.col("dst").alias("node"),
-            (F.col("dist") + F.col("w")).alias("dist"),
-        )
-        dist = (
-            dist.select("node", "dist")
-            .unionAll(relax)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-    return dist
+    es = self_looped_edges(es.select("src", "dst", "w"), edge_buckets)
+    dist = es.groupBy().agg(F.min("src").alias("node")).select(
+        "node", F.lit(0).cast("bigint").alias("dist")
+    )
+    return min_propagate(es, dist, n_iters, edge_buckets)
 
 
 def local_triangle_counts(

@@ -125,10 +125,9 @@ ROWS_ONLY_RATIONALE: dict[str, str] = {
     "dedup_simhash_pairs": "fast path on xxhash64; sketch/blocking/"
     "Hamming-verify machinery hash-verified by sibling "
     "dedup_simhash_pairs_md5 (driver r4)",
-    "dedup_cluster_docs_star": "iterative contraction with data-"
-    "dependent round count (not a pure function SQL can unroll); "
-    "label parity vs union-find pinned in tests, fixed-iteration "
-    "sibling graph_minlabel_components is driver-verified (r4)",
+    "dedup_cluster_docs_star": "same xxhash64-LSH candidates and same "
+    "connected_components as dedup_cluster_docs (see that entry); "
+    "label parity vs union-find pinned in tests",
     "vector_ann_pq_topk": "ADC scores are approximations; the "
     "codebook/encode/LUT machinery is hash-verified by sibling "
     "vector_ann_ivfpq_exact (driver r4), recall pinned in test_pq",

@@ -167,7 +167,7 @@ def corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_cluster_docs",
     oracle=None,  # iterative fixpoint — not SQL; pinned vs union-find in tests
     doc="near-dup cluster assignment: MinHash-LSH candidate pairs "
-    "(est_jaccard >= 0.5) + min-label connected components; cluster_id "
+    "(est_jaccard >= 0.5) + connected components; cluster_id "
     "= smallest doc_id in the component = the canonical survivor",
 )
 def dedup_cluster_docs(spark: SparkSession, sf_dir: str) -> DataFrame:

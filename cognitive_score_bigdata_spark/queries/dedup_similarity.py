@@ -138,22 +138,23 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_cluster_docs_star",
     oracle=None,  # iterative graph algorithm — pinned vs union-find in tests
-    doc="near-dup clustering via large-star/small-star contraction "
-    "(Kiveris et al. SoCC'14): O(log d) rounds vs propagation's O(d), "
-    "the variant that survives adversarially long duplicate chains; "
-    "same labels as dedup_cluster_docs (union-find parity in "
-    "test_corpus.py)",
+    doc="near-dup clustering over the same LSH candidates as "
+    "dedup_cluster_docs, through the same connected_components: a "
+    "driver-side union-find while the edge set fits the driver, "
+    "large-star/small-star contraction rounds (Kiveris et al. SoCC'14, "
+    "O(log d) rounds for diameter d) above that; union-find parity in "
+    "test_corpus.py",
 )
 def dedup_cluster_docs_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cognitive_score_bigdata_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
     )
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_candidate_pairs(docs, "doc_id", "text").filter(
         F.col("est_jaccard") >= 0.5
     )
-    return connected_components_star(pairs, docs, "doc_id")
+    return connected_components(pairs, docs, "doc_id")
 
 
 # dedup_incremental_newbatch moved to queries/round17_staging.py (r14):

@@ -25,7 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from cognitive_score_bigdata_spark.io import load_table
 from cognitive_score_bigdata_spark.operators.graph import (
-    pagerank_fixed_point, sssp_fixed_rounds, triangle_count,
+    min_propagate, pagerank_fixed_point, self_looped_edges,
+    sssp_fixed_rounds, triangle_count,
 )
 from cognitive_score_bigdata_spark.queries import register
 from cognitive_score_bigdata_spark.queries._helpers import dsum, sql_dsum
@@ -397,7 +398,7 @@ FROM l{CC_ITERS}
 
 
 # session-cached symmetrized + self-looped support>=CC_SUPPORT edge
-# table (the minlabel prepared artifact — same economics as the
+# table (the min_propagate build artifact — same economics as the
 # pagerank folds above)
 _CC_EDGE_CACHE: dict = {}
 
@@ -412,11 +413,7 @@ def _cc_withself_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         sym = e.unionAll(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        nodes = sym.select(F.col("src").alias("n")).distinct()
-        withself = sym.unionAll(
-            nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"))
-        )
-        return withself.localCheckpoint(eager=True)
+        return self_looped_edges(sym)
 
     return session_scoped(_CC_EDGE_CACHE, spark, (sf_dir,), build)
 
@@ -436,14 +433,11 @@ def _cc_withself_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle — Pregel shape, edges never reshuffle",
 )
 def graph_minlabel_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cognitive_score_bigdata_spark.operators.graph import (
-        minlabel_components,
-    )
-
     withself = _cc_withself_edges(spark, sf_dir)
-    return minlabel_components(
-        withself, n_iters=CC_ITERS, prepared=True
-    ).select(
+    labels = withself.select("src").distinct().select(
+        F.col("src").alias("node"), F.col("src").alias("lab")
+    )
+    return min_propagate(withself, labels, CC_ITERS).select(
         F.col("node").alias("part_key"),
         F.col("lab").cast("bigint").alias("component"),
     )

@@ -288,14 +288,16 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM reach GROUP BY node
     """,
     doc="near-dup cluster assignment on the EXACT jaccard graph "
-    "(unigram-set >= 0.8 within a source block): min-label connected "
-    "components, cluster_id = smallest reachable doc_id, singletons "
-    "label themselves. First oracle-checked clustering row — DuckDB "
-    "computes the same fixpoint as a recursive-CTE transitive closure, "
-    "so the iterative Spark operator (operators/dedup.py "
-    "connected_components) is value-pinned end to end, not just "
-    "union-find-tested. The LSH variants (dedup_cluster_docs[_star]) "
-    "keep rows-only checks; this query is their exact counterpart",
+    "(unigram-set >= 0.8 within a source block): connected components, "
+    "cluster_id = smallest reachable doc_id, singletons label "
+    "themselves. First oracle-checked clustering row — DuckDB computes "
+    "the same labels as a recursive-CTE transitive closure, so the "
+    "Spark operator (operators/dedup.py connected_components: a "
+    "driver-side union-find while the edge set fits the driver, "
+    "star-contraction rounds above that) is value-pinned end to end, "
+    "not just union-find-tested. The LSH variants "
+    "(dedup_cluster_docs[_star]) keep rows-only checks; this query is "
+    "their exact counterpart",
 )
 def dedup_cluster_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cognitive_score_bigdata_spark.operators.dedup import (
@@ -316,9 +318,6 @@ def dedup_cluster_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = text_ngram_jaccard(spark, sf_dir).select(
             F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
         )
-        # plain propagation: exact-jaccard clusters are dense and shallow
-        # (diameter 2-4), where min-label converges in fewer scheduled
-        # rounds than star contraction (measured: 4.8s vs 5.3s at sf0.1)
         return connected_components(pairs, docs, "doc_id").persist()
 
     return session_scoped(_CLUSTER_CACHE, spark, (sf_dir,), build)

@@ -5,11 +5,11 @@ seeded-KMeans determinism."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from cognitive_score_bigdata_spark.io import load_table
 from cognitive_score_bigdata_spark.operators.dedup import (
     connected_components,
-    connected_components_star,
     minhash_candidate_pairs,
 )
 from cognitive_score_bigdata_spark.queries import load_registry
@@ -73,28 +73,37 @@ def test_star_contraction_matches_union_find(spark):
     pairs = [(r.id_a, r.id_b) for r in pairs_df.collect()]
     nodes = [r.doc_id for r in docs.select("doc_id").collect()]
     expected = _union_find_clusters(pairs, nodes)
+    # local_finish_edges=0: contraction rounds to the fixpoint, no
+    # driver-side union-find
     got = {
         r.doc_id: r.cluster_id
-        for r in connected_components_star(pairs_df, docs, "doc_id").collect()
+        for r in connected_components(
+            pairs_df, docs, "doc_id", local_finish_edges=0
+        ).collect()
     }
     assert got == expected
 
 
-def test_star_contraction_long_chain_logarithmic(spark):
-    """A 200-node path has diameter 199: min-label propagation needs 199
-    rounds (and demonstrably fails under a 12-round budget), star
-    contraction converges in O(log d) — both capped at 12 iterations."""
-    n = 200
+def _path(spark, n):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    return pairs, nodes
+
+
+def test_star_contraction_long_chain_logarithmic(spark):
+    """A 200-node path has diameter 199: min-label propagation would
+    need 199 rounds, star contraction converges in O(log d) — within a
+    12-round cap."""
+    n = 200
+    pairs, nodes = _path(spark, n)
 
     # local_finish_edges=0 forces pure distributed contraction — the
     # O(log d) property must hold without the driver-side shortcut
     star = {
         r.doc_id: r.cluster_id
-        for r in connected_components_star(
+        for r in connected_components(
             pairs, nodes, "doc_id", max_iter=12, local_finish_edges=0
         ).collect()
     }
@@ -103,23 +112,22 @@ def test_star_contraction_long_chain_logarithmic(spark):
     # and the hybrid local finish must give the identical answer
     hybrid = {
         r.doc_id: r.cluster_id
-        for r in connected_components_star(
+        for r in connected_components(
             pairs, nodes, "doc_id", max_iter=12
         ).collect()
     }
     assert hybrid == star
 
-    # force the DISTRIBUTED propagation path (the hybrid local finish
-    # would trivially solve a 200-edge graph): O(d) rounds cannot close
-    # a 200-node chain in 12 iterations, which is why the star variant
-    # exists
-    plain = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(
-            pairs, nodes, "doc_id", max_iter=12, local_finish_edges=0
-        ).collect()
-    }
-    assert plain != star  # the O(d) variant cannot finish the chain
+
+def test_connected_components_raises_without_fixpoint(spark):
+    """Three contraction rounds cannot close a 200-node path; the
+    operator must say so instead of returning labels that are not the
+    components."""
+    pairs, nodes = _path(spark, 200)
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        connected_components(
+            pairs, nodes, "doc_id", max_iter=3, local_finish_edges=0
+        )
 
 
 def test_kmeans_cluster_sizes_deterministic(spark):
@@ -197,8 +205,8 @@ def test_bpe_round_trip_and_determinism(spark):
 
 def test_connected_components_local_and_distributed_agree(spark):
     """The hybrid local finish must be a pure optimization: forcing the
-    distributed propagation path (local_finish_edges=0) yields exactly
-    the same labels as the local union-find fast path."""
+    distributed star-contraction path (local_finish_edges=0) yields
+    exactly the same labels as the local union-find fast path."""
     from cognitive_score_bigdata_spark.operators.dedup import (
         connected_components,
     )

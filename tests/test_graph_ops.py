@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import itertools
 
+import pytest
+
 from cognitive_score_bigdata_spark.operators.graph import (
     PR_BASE,
     PR_INIT,
@@ -270,6 +272,46 @@ def test_sssp_bucketed_mode_identical_dists(spark):
         for r in sssp_fixed_rounds(es, 5, edge_buckets=4).collect()
     }
     assert got == base and len(base) > 0
+
+
+def _brute_bellman_ford(wedges, n_rounds):
+    """Fixed-round Bellman-Ford from the minimum source: the nodes
+    reached within ``n_rounds`` hops, each with its shortest distance
+    over paths of at most ``n_rounds`` edges."""
+    dist = {min(u for u, _, _ in wedges): 0}
+    for _ in range(n_rounds):
+        nxt = dict(dist)
+        for u, v, w in wedges:
+            if u in dist:
+                nxt[v] = min(nxt.get(v, dist[u] + w), dist[u] + w)
+        dist = nxt
+    return dist
+
+
+@pytest.mark.parametrize("n_rounds", [2, 12])
+def test_sssp_matches_brute_force_bellman_ford(spark, n_rounds):
+    """SSSP against a pure-Python Bellman-Ford on the weighted graph of
+    test_sssp_bucketed_mode_identical_dists: at 2 rounds some nodes are
+    still unreached, at 12 the distances have converged."""
+    from cognitive_score_bigdata_spark.operators.graph import (
+        sssp_fixed_rounds,
+    )
+
+    pairs = _symmetrize(_random_sym_pairs(seed=3))
+    wedges = [(u, v, u % 3 + v % 5 + 1) for u, v in pairs]
+    want = _brute_bellman_ford(wedges, n_rounds)
+    converged = _brute_bellman_ford(wedges, n_rounds + 1)
+    reachable = _brute_bellman_ford(wedges, len(pairs))
+    if n_rounds == 2:
+        assert len(want) < len(reachable)
+    else:
+        assert want == converged == reachable
+    es = spark.createDataFrame(wedges, "src long, dst long, w long")
+    got = {
+        r["node"]: r["dist"]
+        for r in sssp_fixed_rounds(es, n_rounds).collect()
+    }
+    assert got == want
 
 
 def test_skyline_matches_bruteforce(spark):

@@ -471,7 +471,11 @@ def test_dedup_pipeline_blocking_is_bucket_bounded(spark):
         assert "toks" not in cols, f"token array in exchange: {cols}"
 
 
-def test_bucketed_edge_iteration_has_no_edge_side_exchange(spark):
+@pytest.mark.parametrize(
+    "fixpoint", ["pagerank_fixed_point", "minlabel_components",
+                 "sssp_fixed_rounds"],
+)
+def test_bucketed_edge_iteration_has_no_edge_side_exchange(spark, fixpoint):
     """VERDICT r4 #2: beyond the ~2M-node broadcast ceiling the graph
     fixpoints must run on the bucketed-edge layout — the loop-invariant
     edge table is bucketBy(src) once, and with broadcast DISABLED each
@@ -483,19 +487,19 @@ def test_bucketed_edge_iteration_has_no_edge_side_exchange(spark):
 
     import pyspark.sql.functions as F
 
-    from cognitive_score_bigdata_spark.operators.graph import (
-        pagerank_fixed_point,
-    )
+    from cognitive_score_bigdata_spark.operators import graph
     from cognitive_score_bigdata_spark.plans.audit import plan_text
 
     pairs = [(u, v) for u in range(12) for v in range(12) if u != v and (u + v) % 3 == 0]
     e = spark.createDataFrame(pairs, "src long, dst long")
+    if fixpoint == "sssp_fixed_rounds":
+        e = e.withColumn("w", (F.col("src") % 4 + 1).cast("bigint"))
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        ranks = pagerank_fixed_point(e, n_iters=3, edge_buckets=4)
-        ranks.collect()
-        t = plan_text(ranks)
+        out = getattr(graph, fixpoint)(e, n_iters=3, edge_buckets=4)
+        out.collect()
+        t = plan_text(out)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "Bucketed: true" in t, t[:3000]
@@ -510,7 +514,7 @@ def test_bucketed_edge_iteration_has_no_edge_side_exchange(spark):
         has_src = re.search(r"\bsrc#", cols) is not None
         has_dst = re.search(r"\bdst#", cols) is not None
         assert not (has_src and has_dst), f"edge row in exchange: {cols}"
-        assert "__w#" not in cols and not re.search(r"\bd#", cols), (
+        assert "__w#" not in cols and not re.search(r"\b[dw]#", cols), (
             f"edge payload in exchange: {cols}"
         )
 
