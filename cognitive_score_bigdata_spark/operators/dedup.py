@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import StructField, StructType
 
 from cognitive_score_bigdata_spark.io import fan_out
+from cognitive_score_bigdata_spark.operators.graph import collect_if_small
 
 DEFAULT_NUM_HASHES = 32
 DEFAULT_BANDS = 8  # 8 bands x 4 rows -> threshold s ~ (1/b)^(1/r) ~ 0.6
@@ -454,15 +455,11 @@ def simhash_candidate_pairs(
     )
 
 
-LOCAL_FINISH_EDGES = 2_000_000
-
-
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 30,
-    local_finish_edges: int | None = None,
 ) -> DataFrame:
     """Near-dup clusters: label every node with the MIN id reachable
     through the pair graph — the canonical "pick one survivor per
@@ -473,23 +470,21 @@ def connected_components(
     (id_col, cluster_id).
 
     Hybrid local finish (the GraphX/production pattern): while the
-    deduplicated symmetric edge set is larger than ``local_finish_edges``
-    (default ``LOCAL_FINISH_EDGES`` = 2M edges ≈ 32 MB driver), each
-    round runs one large-star and one small-star contraction (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC 2014):
-    O(log d) rounds for a diameter-d component, so a 10^6-long chain
-    needs ~20 rounds, not 10^6. Contraction shrinks the graph
-    geometrically and preserves connectivity (hence min-id labels), so
-    as soon as the remainder fits the driver, a union-find over the
-    collected half-edges labels it in one collect instead of the long
-    tail of tiny distributed rounds. Near-dup graphs that already fit
-    never run a contraction round.
+    deduplicated symmetric edge set does not fit the driver budget
+    (``graph.LOCAL_FINISH_BYTES`` = 32 MiB ≈ 2M edges, checked by
+    ``graph.collect_if_small``), each round runs one large-star and one
+    small-star contraction (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", SoCC 2014): O(log d) rounds for a diameter-d
+    component, so a 10^6-long chain needs ~20 rounds, not 10^6.
+    Contraction shrinks the graph geometrically and preserves
+    connectivity (hence min-id labels), so as soon as the remainder fits
+    the driver, a union-find over the collected half-edges labels it in
+    one collect instead of the long tail of tiny distributed rounds.
+    Near-dup graphs that already fit never run a contraction round.
 
     Raises ``RuntimeError`` when ``max_iter`` rounds end with neither a
     fixpoint nor a local finish: the labels would not be the components.
     """
-    if local_finish_edges is None:
-        local_finish_edges = LOCAL_FINISH_EDGES
     sym = _symmetric(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     ).localCheckpoint(eager=True)
@@ -498,13 +493,15 @@ def connected_components(
         sig = tuple(
             sym.agg(F.count(F.lit(1)), F.sum("src"), F.sum("dst")).collect()[0]
         )
-        if sig[0] <= local_finish_edges:
-            # Arrow transfer, not row collect: py4j Row conversion
-            # measured 8x slower (1.33 s vs 0.17 s at 300k edges)
-            half = sym.filter(F.col("src") < F.col("dst")).toPandas()
-            lab = _local_min_labels(
-                list(zip(half["src"].tolist(), half["dst"].tolist()))
-            )
+        # the signature's edge count bounds the half-edges, so the size
+        # check adds no job; Arrow, not a row collect: py4j Row
+        # conversion measured 8x slower (1.33 s vs 0.17 s at 300k edges)
+        half = collect_if_small(
+            sym.filter(F.col("src") < F.col("dst")), rows=sig[0]
+        )
+        if half is not None:
+            src, dst = (half[c].to_numpy().tolist() for c in ("src", "dst"))
+            lab = _local_min_labels(list(zip(src, dst)))
             t = sym.schema["src"].dataType
             labels = F.broadcast(
                 nodes.sparkSession.createDataFrame(
@@ -526,7 +523,7 @@ def connected_components(
     else:
         raise RuntimeError(
             f"connected_components: no fixpoint after {max_iter} "
-            "contraction rounds; raise max_iter or local_finish_edges"
+            "contraction rounds; raise max_iter"
         )
     return (
         nodes.select(F.col(id_col).alias("node"))

@@ -20,12 +20,19 @@ Design notes:
   its self-looped edge table (:func:`self_looped_edges`) and its seed.
   PageRank keeps its own loop — a sum over every in-edge, where every
   vertex changes every round.
-- **Skew posture.** The fixpoints broadcast the |V|-row state (ranks,
-  labels, distances) into the edge list — edges never shuffle inside
-  the loop, only the dst-keyed aggregate does. Triangle counting uses
-  degree orientation: ranking nodes by (degree, id) and directing every
-  edge low→high bounds out-degree at O(√E), so a celebrity node
-  generates zero wedges from its low side instead of deg² of them.
+- **Plan by size** (Pregelix's choice of physical plan from the data
+  size). A min fixpoint whose edge table fits ``LOCAL_FINISH_BYTES``
+  runs its rounds on the driver: a count and an Arrow collect of the
+  edges (:func:`collect_if_small`), an Arrow collect of the seed, a
+  numpy loop and one ``createDataFrame`` — instead of one Spark round
+  trip per round. Above the budget the fixpoints broadcast the |V|-row
+  state (ranks, labels, distances) into the edge list — edges never
+  shuffle inside the loop, only the dst-keyed aggregate does. PageRank
+  always takes the distributed loop.
+- **Skew posture.** Triangle counting uses degree orientation: ranking
+  nodes by (degree, id) and directing every edge low→high bounds
+  out-degree at O(√E), so a celebrity node generates zero wedges from
+  its low side instead of deg² of them.
 - **Beyond the broadcast ceiling** (SURVEY §9h: ≳2M nodes ≈ 32 MB rank
   table, where Catalyst flips the rank join to SMJ and every iteration
   would re-shuffle the 100 TB-scale EDGE list): every fixpoint here
@@ -43,7 +50,7 @@ Design notes:
 
 The near-duplicate clustering in ``operators/dedup.py`` is the
 data-dependent counterpart: star contraction to a fixpoint, finished
-by a driver-side union-find.
+by a driver-side union-find behind the same size gate.
 """
 
 from __future__ import annotations
@@ -54,11 +61,36 @@ import shutil
 import tempfile
 import weakref
 
+import numpy as np
+import pyarrow as pa
 import pyspark.sql.functions as F
+from pyspark.errors import ArithmeticException
 from pyspark.sql import DataFrame, Window
+from pyspark.sql.types import IntegralType
 
 PR_BASE = 150_000  # (1 - d) in micro-units, d = 0.85
 PR_INIT = 1_000_000
+
+# Driver budget of a local finish, at 8 bytes a column (every gated
+# table is integral): 32 MiB is ~2M two-column edges, Spark's broadcast
+# ceiling for the same tables.
+LOCAL_FINISH_BYTES = 32 * 1024 * 1024
+
+
+def collect_if_small(df: DataFrame, rows: int | None = None) -> pa.Table | None:
+    """``df`` collected through Arrow when its rows take less than
+    ``LOCAL_FINISH_BYTES``, else ``None`` (the caller's distributed path).
+
+    ``rows`` is an upper bound on ``df``'s row count the caller already
+    has; without it the rows are counted here, so the size check and the
+    collect are two Spark jobs. The budget is read at call time: at 0
+    every caller takes its distributed path."""
+    if rows is None:
+        rows = df.count()
+    if rows * 8 * len(df.columns) >= LOCAL_FINISH_BYTES:
+        return None
+    return df.toArrow()
+
 
 _BUCKET_SEQ = itertools.count()
 
@@ -351,23 +383,47 @@ def min_propagate(
     :func:`sssp_fixed_rounds` (RaSQL's recursive MIN; Pregel's
     message-then-min round).
 
-    ``init`` is the seed state ``(node, <value>)``. Each round joins the
+    ``init`` is the seed state ``(node, <value>)``, at most one row per
+    ``src`` node (every node, or the one source). Each round joins the
     state into ``edges`` on ``src`` and takes, per ``dst``, the MIN of
     the source's value, plus the edge's ``w`` when ``edges`` carries a
     ``w`` column. ``edges`` is the :func:`self_looped_edges` table, so
     every node's own value takes part in its min and a value never gets
     worse; a node no path reaches within ``n_iters`` hops is absent.
     Returns the state after ``n_iters`` rounds, with ``init``'s columns.
+    A sum of ``w`` past the value type raises ``ArithmeticException``,
+    as Spark's ANSI arithmetic does.
 
-    Per round the |V|-row state is broadcast into the edge table and one
-    min-aggregate shuffles on ``dst``; edges never move. The state is
-    read once per round, so the unrolled plan grows linearly, not
-    2^k-fold. ``edge_buckets=N`` (``edges`` then being the bucketed
-    scan): the state sort-merge joins INTO the bucket partitioning
-    instead — the >2M-node layout, see :func:`pagerank_fixed_point`.
+    Three plans, one result. When every column shares one integral type
+    and the edge table fits ``LOCAL_FINISH_BYTES`` (:func:`collect_if_small`;
+    the seed is no larger), the rounds run on the driver as a numpy
+    loop (:func:`_min_propagate_local`) and the state comes back through
+    ``createDataFrame``. Otherwise, per round the |V|-row state is
+    broadcast into the edge table and one min-aggregate shuffles on
+    ``dst``; edges never move. The state is read once per round, so the
+    unrolled plan grows linearly, not 2^k-fold. ``edge_buckets=N``
+    (``edges`` then being the bucketed scan) always runs distributed:
+    the state sort-merge joins INTO the bucket partitioning — the
+    >2M-node layout, see :func:`pagerank_fixed_point`.
     """
     val = init.columns[1]
-    msg = F.col(val) + F.col("w") if "w" in edges.columns else F.col(val)
+    weighted = "w" in edges.columns
+    cols = ["src", "dst", "w"] if weighted else ["src", "dst"]
+    types = {edges.schema[c].dataType for c in cols} | {
+        f.dataType for f in init.schema.fields
+    }
+    if (
+        edge_buckets is None
+        and n_iters > 0
+        and len(types) == 1
+        and isinstance(types.pop(), IntegralType)
+    ):
+        e = collect_if_small(edges.select(cols))
+        # at most one seed row per src: the edge count bounds the seed
+        s = None if e is None else init.toArrow()
+        if s is not None and not any(c.null_count for c in e.columns + s.columns):
+            return _min_propagate_local(init, e, s, n_iters)
+    msg = F.col(val) + F.col("w") if weighted else F.col(val)
     state = init
     for _ in range(n_iters):
         side = F.broadcast(state) if edge_buckets is None else state
@@ -378,6 +434,46 @@ def min_propagate(
             .select(F.col("dst").alias("node"), val)
         )
     return state
+
+
+def _min_propagate_local(
+    init: DataFrame, e: pa.Table, s: pa.Table, n_iters: int
+) -> DataFrame:
+    """:func:`min_propagate`'s rounds over the collected edge table ``e``
+    and seed ``s``: per round, the edges whose ``src`` holds a value send
+    it (plus ``w``) to ``dst``, and each reached ``dst`` keeps the MIN.
+    A boolean mask, not a sentinel value, says which nodes hold one."""
+    src, dst, node, v = (
+        c.to_numpy() for c in (e["src"], e["dst"], s.column(0), s.column(1))
+    )
+    w = e["w"].to_numpy() if "w" in e.column_names else None
+    ids = np.unique(np.concatenate([src, dst, node]))
+    src, dst, node = (np.searchsorted(ids, a) for a in (src, dst, node))
+    top = np.iinfo(v.dtype).max
+    have = np.zeros(len(ids), bool)
+    have[node] = True
+    cur = np.full(len(ids), top, v.dtype)
+    np.minimum.at(cur, node, v)
+    for _ in range(n_iters):
+        live = have[src]
+        msg = cur[src[live]]
+        if w is not None:
+            wl = w[live]
+            tot = msg + wl  # wraps on overflow; caught below
+            if ((msg ^ tot) & (wl ^ tot) < 0).any():
+                raise ArithmeticException(
+                    message="[ARITHMETIC_OVERFLOW] integer overflow in "
+                    "min_propagate: a distance plus an edge weight "
+                    "exceeds the value type"
+                )
+            msg = tot
+        reached = dst[live]
+        cur = np.full(len(ids), top, v.dtype)
+        np.minimum.at(cur, reached, msg)
+        have = np.zeros(len(ids), bool)
+        have[reached] = True
+    out = pa.table([ids[have], cur[have]], names=init.columns)
+    return init.sparkSession.createDataFrame(out, init.schema)
 
 
 def self_looped_edges(

@@ -428,9 +428,11 @@ def _cc_withself_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rows-only (the star-contraction CC in operators/dedup.py "
     "converges data-dependently) carries an exact unrolled-CTE oracle. "
     "Convergence at this depth is pinned separately in "
-    "tests/test_graph_ops.py (8 vs 12 rounds identical on this graph); "
-    "per round: broadcast the |V|-row label vector, one min-agg "
-    "shuffle — Pregel shape, edges never reshuffle",
+    "tests/test_graph_ops.py (8 vs 12 rounds identical on this graph). "
+    "An edge table within graph.LOCAL_FINISH_BYTES runs the rounds on "
+    "the driver (count, Arrow collect, numpy min loop); above it, per "
+    "round: broadcast the |V|-row label vector, one min-agg shuffle — "
+    "Pregel shape, edges never reshuffle",
 )
 def graph_minlabel_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     withself = _cc_withself_edges(spark, sf_dir)
@@ -497,10 +499,12 @@ SELECT node AS part_key, dist AS dist_milli FROM d{SSSP_ITERS}
     "rounds from the minimum part key. Fixed iterations + integer "
     "weights = pure function of the input, so the unrolled-CTE oracle "
     "matches exactly whether or not the fixpoint has been reached "
-    "(same contract as graph_minlabel_components). Per round: "
-    "broadcast the frontier distances into the edge list, one min-agg "
-    "shuffle — Spark has no recursive SQL, the iterate-and-min-merge "
-    "loop IS the engine's recursive aggregate",
+    "(same contract as graph_minlabel_components, including the "
+    "driver-side rounds while the edge table fits "
+    "graph.LOCAL_FINISH_BYTES). Distributed, per round: broadcast the "
+    "frontier distances into the edge list, one min-agg shuffle — "
+    "Spark has no recursive SQL, the iterate-and-min-merge loop IS the "
+    "engine's recursive aggregate",
 )
 def graph_sssp_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = copurchase_pairs(spark, sf_dir)

@@ -8,6 +8,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from cognitive_score_bigdata_spark.io import load_table
+from cognitive_score_bigdata_spark.operators import graph
 from cognitive_score_bigdata_spark.operators.dedup import (
     connected_components,
     minhash_candidate_pairs,
@@ -65,7 +66,7 @@ def test_connected_components_transitive_chain(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
 
 
-def test_star_contraction_matches_union_find(spark):
+def test_star_contraction_matches_union_find(spark, monkeypatch):
     docs = load_table(spark, SF_DIR, "documents")
     pairs_df = minhash_candidate_pairs(docs, "doc_id", "text").filter(
         F.col("est_jaccard") >= 0.5
@@ -73,13 +74,12 @@ def test_star_contraction_matches_union_find(spark):
     pairs = [(r.id_a, r.id_b) for r in pairs_df.collect()]
     nodes = [r.doc_id for r in docs.select("doc_id").collect()]
     expected = _union_find_clusters(pairs, nodes)
-    # local_finish_edges=0: contraction rounds to the fixpoint, no
+    # a zero driver budget: contraction rounds to the fixpoint, no
     # driver-side union-find
+    monkeypatch.setattr(graph, "LOCAL_FINISH_BYTES", 0)
     got = {
         r.doc_id: r.cluster_id
-        for r in connected_components(
-            pairs_df, docs, "doc_id", local_finish_edges=0
-        ).collect()
+        for r in connected_components(pairs_df, docs, "doc_id").collect()
     }
     assert got == expected
 
@@ -92,21 +92,23 @@ def _path(spark, n):
     return pairs, nodes
 
 
-def test_star_contraction_long_chain_logarithmic(spark):
+def test_star_contraction_long_chain_logarithmic(spark, monkeypatch):
     """A 200-node path has diameter 199: min-label propagation would
     need 199 rounds, star contraction converges in O(log d) — within a
     12-round cap."""
     n = 200
     pairs, nodes = _path(spark, n)
 
-    # local_finish_edges=0 forces pure distributed contraction — the
+    # a zero driver budget forces pure distributed contraction — the
     # O(log d) property must hold without the driver-side shortcut
-    star = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(
-            pairs, nodes, "doc_id", max_iter=12, local_finish_edges=0
-        ).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(graph, "LOCAL_FINISH_BYTES", 0)
+        star = {
+            r.doc_id: r.cluster_id
+            for r in connected_components(
+                pairs, nodes, "doc_id", max_iter=12
+            ).collect()
+        }
     assert star == {i: 0 for i in range(n)}
 
     # and the hybrid local finish must give the identical answer
@@ -119,15 +121,14 @@ def test_star_contraction_long_chain_logarithmic(spark):
     assert hybrid == star
 
 
-def test_connected_components_raises_without_fixpoint(spark):
+def test_connected_components_raises_without_fixpoint(spark, monkeypatch):
     """Three contraction rounds cannot close a 200-node path; the
     operator must say so instead of returning labels that are not the
     components."""
     pairs, nodes = _path(spark, 200)
+    monkeypatch.setattr(graph, "LOCAL_FINISH_BYTES", 0)
     with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(
-            pairs, nodes, "doc_id", max_iter=3, local_finish_edges=0
-        )
+        connected_components(pairs, nodes, "doc_id", max_iter=3)
 
 
 def test_kmeans_cluster_sizes_deterministic(spark):
@@ -203,9 +204,9 @@ def test_bpe_round_trip_and_determinism(spark):
     assert bpe_train(docs, n_merges=64) == merges
 
 
-def test_connected_components_local_and_distributed_agree(spark):
+def test_connected_components_local_and_distributed_agree(spark, monkeypatch):
     """The hybrid local finish must be a pure optimization: forcing the
-    distributed star-contraction path (local_finish_edges=0) yields
+    distributed star-contraction path (a zero driver budget) yields
     exactly the same labels as the local union-find fast path."""
     from cognitive_score_bigdata_spark.operators.dedup import (
         connected_components,
@@ -220,11 +221,10 @@ def test_connected_components_local_and_distributed_agree(spark):
         (r["doc_id"], r["cluster_id"])
         for r in connected_components(pairs, nodes, "doc_id").collect()
     }
+    monkeypatch.setattr(graph, "LOCAL_FINISH_BYTES", 0)
     dist = {
         (r["doc_id"], r["cluster_id"])
-        for r in connected_components(
-            pairs, nodes, "doc_id", local_finish_edges=0
-        ).collect()
+        for r in connected_components(pairs, nodes, "doc_id").collect()
     }
     assert local == dist
     assert (8, 3) in local and (9, 3) in local

@@ -14,12 +14,31 @@ import itertools
 
 import pytest
 
+from cognitive_score_bigdata_spark.operators import graph
 from cognitive_score_bigdata_spark.operators.graph import (
     PR_BASE,
     PR_INIT,
     pagerank_fixed_point,
     triangle_count,
 )
+
+
+@pytest.fixture(params=["local", "broadcast"])
+def min_path(request, monkeypatch):
+    """Run a min fixpoint on the driver-side local finish, or (with a
+    zero driver budget) on the distributed broadcast loop; the local
+    case fails unless the local loop really ran."""
+    if request.param == "broadcast":
+        monkeypatch.setattr(graph, "LOCAL_FINISH_BYTES", 0)
+        yield
+        return
+    calls = []
+    local = graph._min_propagate_local
+    monkeypatch.setattr(
+        graph, "_min_propagate_local", lambda *a: calls.append(a) or local(*a)
+    )
+    yield
+    assert calls, "the local loop never ran"
 
 
 def _edges_df(spark, pairs):
@@ -135,10 +154,11 @@ def test_pagerank_irregular_matches_bruteforce(spark):
 # --- min-label connected components -----------------------------------------
 
 
-def test_minlabel_path_needs_depth(spark):
+def test_minlabel_path_needs_depth(spark, min_path):
     """A 0-9 path: node 9 is 9 hops from the minimum, so 8 rounds have
     NOT converged (its label is still 1) while 9 rounds finish the job
-    — the fixed-iteration semantics the oracle depends on."""
+    — the fixed-iteration semantics the oracle depends on, on both the
+    local and the broadcast path."""
     from cognitive_score_bigdata_spark.operators.graph import (
         minlabel_components,
     )
@@ -289,10 +309,11 @@ def _brute_bellman_ford(wedges, n_rounds):
 
 
 @pytest.mark.parametrize("n_rounds", [2, 12])
-def test_sssp_matches_brute_force_bellman_ford(spark, n_rounds):
+def test_sssp_matches_brute_force_bellman_ford(spark, n_rounds, min_path):
     """SSSP against a pure-Python Bellman-Ford on the weighted graph of
-    test_sssp_bucketed_mode_identical_dists: at 2 rounds some nodes are
-    still unreached, at 12 the distances have converged."""
+    test_sssp_bucketed_mode_identical_dists, on both the local and the
+    broadcast path: at 2 rounds some nodes are still unreached, at 12
+    the distances have converged."""
     from cognitive_score_bigdata_spark.operators.graph import (
         sssp_fixed_rounds,
     )
@@ -312,6 +333,82 @@ def test_sssp_matches_brute_force_bellman_ford(spark, n_rounds):
         for r in sssp_fixed_rounds(es, n_rounds).collect()
     }
     assert got == want
+
+
+def _min_graphs():
+    """(edges, seed, n_iters) triples for the cross-path test."""
+    import random
+
+    rng = random.Random(17)
+    # directed, weighted; nodes 20-24 are only ever a dst, and the seed
+    # holds two nodes with different starting values plus node 99, which
+    # has no edge and so drops out after the first round
+    directed = sorted(
+        {
+            (rng.randrange(15), rng.randrange(25), rng.randrange(1, 9))
+            for _ in range(60)
+        }
+    )
+    yield directed, [(0, 5), (7, 0), (99, 1)], 4
+    # unweighted min-label seeded in one of two components: the other
+    # component is never reached
+    pairs = _symmetrize(_random_sym_pairs(seed=9, n_nodes=12, n_edges=14))
+    pairs += _symmetrize([(100 + i, 101 + i) for i in range(6)])
+    yield pairs, [(n, n) for n in range(12)], 5
+    # a weighted path longer than the round count
+    yield [(i, i + 1, i % 4 + 1) for i in range(14)], [(0, 0)], 6
+
+
+@pytest.mark.parametrize("case", range(3))
+def test_min_propagate_paths_match_bucketed(spark, min_path, case):
+    """The three plans of min_propagate return the same state: the local
+    driver loop and the broadcast loop each equal the bucketed loop."""
+    from cognitive_score_bigdata_spark.operators.graph import (
+        min_propagate,
+        self_looped_edges,
+    )
+
+    edges, seed, n = list(_min_graphs())[case]
+    if len(edges[0]) == 3:
+        e = spark.createDataFrame(edges, "src long, dst long, w long")
+    else:
+        e = _edges_df(spark, edges)
+    init = spark.createDataFrame(seed, "node long, val long")
+
+    def run(buckets=None):
+        out = min_propagate(self_looped_edges(e, buckets), init, n, buckets)
+        assert out.columns == ["node", "val"]
+        return {r.node: r.val for r in out.collect()}
+
+    got = run()
+    assert got == run(4)
+    nodes = {x for ed in edges for x in ed[:2]}
+    if case == 0:
+        assert got.keys() & set(range(20, 25))  # a dst-only node
+        assert 99 not in got
+    elif case == 1:
+        assert not got.keys() & set(range(100, 107))
+    else:
+        assert got.keys() == set(range(n + 1)) < nodes
+
+
+def test_min_propagate_overflow_raises(spark, min_path):
+    """A distance plus a weight past BIGINT raises on both paths, as
+    Spark's ANSI arithmetic does; it never wraps to a small minimum."""
+    from pyspark.errors import ArithmeticException
+
+    from cognitive_score_bigdata_spark.operators.graph import sssp_fixed_rounds
+
+    big = 2**62
+    es = spark.createDataFrame(
+        [(0, 1, big), (1, 2, big), (2, 3, 1)], "src long, dst long, w long"
+    )
+    assert {r.node: r.dist for r in sssp_fixed_rounds(es, 1).collect()} == {
+        0: 0,
+        1: big,
+    }
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        sssp_fixed_rounds(es, 2).collect()
 
 
 def test_skyline_matches_bruteforce(spark):

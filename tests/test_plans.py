@@ -519,6 +519,29 @@ def test_bucketed_edge_iteration_has_no_edge_side_exchange(spark, fixpoint):
         )
 
 
+@pytest.mark.parametrize("budget", ["default", 0])
+def test_minlabel_plan_follows_driver_budget(spark, monkeypatch, budget):
+    """The min-label fixpoint picks its plan from the driver budget: at
+    this scale its edge table fits, so the executed plan is a local
+    table with no Exchange at all; with the budget at 0 it is the
+    unrolled broadcast plan, one BroadcastExchange of the label vector
+    per round."""
+    from cognitive_score_bigdata_spark.operators import graph
+    from cognitive_score_bigdata_spark.plans.audit import plan_text
+    from cognitive_score_bigdata_spark.queries.graphs import CC_ITERS
+
+    if budget == 0:
+        monkeypatch.setattr(graph, "LOCAL_FINISH_BYTES", 0)
+    out = REGISTRY["graph_minlabel_components"].fn(spark, SF_DIR)
+    out.collect()
+    t = plan_text(out)
+    if budget == 0:
+        final = t.split("== Initial Plan ==")[0]
+        assert final.count("BroadcastExchange") == CC_ITERS, t[:3000]
+    else:
+        assert "Exchange" not in t, t[:3000]
+
+
 def test_skyline_is_sweep_not_self_join(spark):
     """The skyline query must run the sort-sweep formulation: per-price
     aggregate + window over the distinct-price table + one broadcast
