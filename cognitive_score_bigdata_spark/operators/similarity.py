@@ -527,7 +527,7 @@ def cosine_neardup_lsh(
 
 
 def semantic_dedup_pairs(
-    vectors: DataFrame,
+    vectors: DataFrame | None = None,
     threshold: float = 0.95,
     n_cells: int = 8,
     seed: int = 42,
@@ -553,8 +553,12 @@ def semantic_dedup_pairs(
     whose members fall in different clusters are missed; duplicates are
     near-identical vectors, which land in the same cell except exactly
     on a Voronoi boundary. Raise n_cells for speed, lower it for recall.
-    Pass a prebuilt ``index`` to reuse a session-cached quantization.
+    Pass a prebuilt ``index`` to reuse a session-cached quantization;
+    the pairs then come from the index alone and ``vectors`` may be
+    omitted.
     """
+    if index is None and vectors is None:
+        raise ValueError("semantic_dedup_pairs needs vectors or an index")
     idx = index if index is not None else ivf_build(
         vectors, n_cells=n_cells, seed=seed, id_col=id_col, vec_col=vec_col
     )

@@ -150,9 +150,7 @@ def dedup_semantic_pairs_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cand = _seeded_cand(spark, sf_dir)
     idx = IvfIndex(cand, centers_df=None)
-    pairs = semantic_dedup_pairs(
-        _planted_corpus(spark, sf_dir), threshold=SEM_THRESHOLD, index=idx
-    )
+    pairs = semantic_dedup_pairs(threshold=SEM_THRESHOLD, index=idx)
     cells = cand.select(
         F.col("neighbor_id").alias("id_a"), F.col("cell").cast("long").alias("cell")
     )

@@ -156,14 +156,9 @@ def vector_ann_lsh_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
         IvfIndex,
         semantic_dedup_pairs,
     )
-    from cognitive_score_bigdata_spark.queries.round12 import _planted_corpus
 
     cand = _lsh_cand(spark, sf_dir)
-    pairs = semantic_dedup_pairs(
-        _planted_corpus(spark, sf_dir),
-        threshold=LSH_THRESHOLD,
-        index=IvfIndex(cand, None),
-    )
+    pairs = semantic_dedup_pairs(threshold=LSH_THRESHOLD, index=IvfIndex(cand, None))
     buckets = cand.select(
         F.col("neighbor_id").alias("id_a"),
         F.col("cell").cast("bigint").alias("bucket"),

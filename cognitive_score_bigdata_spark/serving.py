@@ -86,16 +86,23 @@ def status_lookup(wearables: DataFrame, user_id: str) -> DataFrame:
     recent snapshot as a top-1 by event time (TakeOrderedAndProject —
     never a global sort).
 
-    Over the latest-state table (partitioned by ``bucket``) the lookup
-    also filters on the key's bucket, which Spark folds to a literal
-    partition filter, so the scan opens one bucket's files — the
-    reference's DynamoDB ``query`` likewise touches only the key's
-    partition. Frames without a ``bucket`` column are filtered on
+    Over the latest-state table (partitioned by ``n_buckets`` and
+    ``bucket``) the lookup also filters on the key's bucket under each
+    layout's own bucket count, ``bucket == state_bucket(lit(user_id),
+    col("n_buckets"))``. The predicate references partition columns only,
+    so Spark applies it as a partition filter and the scan opens one
+    bucket's files per layout, without the reader knowing the count —
+    the reference's DynamoDB ``query`` likewise touches only the key's
+    partition. While an interrupted resize leaves two layouts, each holds
+    the user in the bucket the predicate picks and the top-1 by event
+    time answers. Frames without an ``n_buckets`` column are filtered on
     ``user_id`` alone.
     """
     pred = F.col("user_id") == user_id
-    if "bucket" in wearables.columns:
-        pred = pred & (F.col("bucket") == state_bucket(F.lit(user_id)))
+    if "n_buckets" in wearables.columns:
+        pred = pred & (
+            F.col("bucket") == state_bucket(F.lit(user_id), F.col("n_buckets"))
+        )
     # heart_rate/steps break timestamp ties deterministically (the
     # DynamoDB reference never faces ties — its sort key is unique;
     # repeated calls here must return a stable row regardless)

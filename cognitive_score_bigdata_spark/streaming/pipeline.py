@@ -23,22 +23,33 @@ caveat), each exercised by tests:
   ("Key format: raw/YYYY-MM-DD/...", ``ingestion.py:32-33``) but writes
   flat; we actually partition by ingest_date so cold-path scans prune.
 
-Scale posture: the latest-state table is parquet partitioned by
-:func:`state_bucket`, a stable hash bucket of ``user_id``, with dynamic
-partition overwrite — a micro-batch reads and rewrites only the buckets
-it touches (~touched_users/total fraction of the table) instead of the
-whole table, one file per bucket. Readers prune by the same function: a
-keyed lookup adds ``bucket == state_bucket(lit(user_id))`` and scans one
-bucket. Bucket count is a knob (64 here, thousands at 100 TB).
+Scale posture: the latest-state table is parquet laid out as
+``n_buckets=N/bucket=k/``, where ``k`` is :func:`state_bucket`, a stable
+hash bucket of ``user_id``, and ``N`` is the table's bucket count, sized
+from its bytes (:data:`STATE_BUCKET_BYTES` a bucket) and doubled as the
+table grows. Writes are dynamic partition overwrites — a micro-batch
+reads and rewrites only the buckets it touches (~touched_users/total
+fraction of the table) instead of the whole table, one file per bucket.
+Readers prune by the same function without knowing ``N``: a keyed lookup
+adds ``bucket == state_bucket(lit(user_id), col("n_buckets"))`` and scans
+one bucket.
 """
 
 from __future__ import annotations
+
+import re
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-N_STATE_BUCKETS = 64
+# Bytes a latest-state bucket may hold before the table doubles its
+# bucket count. A status read scans one bucket, and a bucket this size
+# costs it little: on local[2] with C1 JIT only, worker_status over one
+# 14.2 MB bucket of 1M users took p50 134 ms (40 lookups), against
+# 120 ms over one 0.1 MB bucket of 5,000 users. Every further bucket adds
+# a file to each write and to each listing of the table.
+STATE_BUCKET_BYTES = 16 * 1024 * 1024
 
 # One stream, two shapes, discriminated by `schema` (FIXTURES.md §A4);
 # union schema-on-read, shape-specific fields null on the other shape.
@@ -133,11 +144,44 @@ def route(df: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-def state_bucket(col) -> F.Column:
+def state_bucket(col, n) -> F.Column:
     """Stable state-table bucket of a ``user_id`` column or literal: the
-    non-negative hash of the key. The writer partitions by it and keyed
-    readers prune by it, so both must call this one function."""
-    return F.pmod(F.xxhash64(col), F.lit(N_STATE_BUCKETS)).cast("int")
+    non-negative hash of the key modulo the bucket count ``n``, an int or
+    the table's ``n_buckets`` column. The writer partitions by it and
+    keyed readers prune by it, so both must call this one function."""
+    return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath  # noqa: SLF001
+
+
+def state_layouts(spark: SparkSession, state_dir: str) -> dict:
+    """The latest-state table's layouts, bucket count → Hadoop path of its
+    ``n_buckets=N`` directory, from one listing of the root (no Spark
+    job). Empty when there is no table yet. Entries starting with ``_``
+    or ``.`` are skipped, as Spark's reader skips them; any other entry,
+    such as a ``bucket=``-only layout, raises ``ValueError``, so a table
+    that is there but unreadable is never taken for a new one. More than
+    one layout means a resize was interrupted: the largest is current.
+    """
+    fs, root = _hadoop_path(spark, state_dir)
+    if not fs.exists(root):
+        return {}
+    layouts = {}
+    for status in fs.listStatus(root):
+        name = status.getPath().getName()
+        if name.startswith(("_", ".")):
+            continue
+        m = re.fullmatch(r"n_buckets=([1-9]\d*)", name)
+        if m is None or not status.isDirectory():
+            raise ValueError(
+                f"{state_dir}: {name!r} is not an n_buckets=N layout of the "
+                "latest-state table"
+            )
+        layouts[int(m.group(1))] = status.getPath()
+    return layouts
 
 
 def upsert_latest_state(
@@ -151,9 +195,21 @@ def upsert_latest_state(
     overwrite so only touched hash buckets rewrite. Overwriting a
     partition is idempotent per epoch → exactly-once effect on replays.
 
-    The merge scans only the touched buckets of the existing table, and
-    its one shuffle is on ``bucket``, so each bucket is aggregated and
-    written by one task: one file per bucket.
+    The bucket count comes from the table's bytes, read with one Hadoop
+    ``getContentSummary`` of the current layout: the smallest power of
+    two that keeps a bucket within :data:`STATE_BUCKET_BYTES`, never
+    fewer buckets than the table has. A new table gets one bucket.
+
+    - Same count: the merge scans only the touched buckets of the
+      current layout, and its one shuffle is on ``bucket``, so each
+      bucket is aggregated and written by one task: one file per bucket.
+    - Larger count: the merge takes every row of the current layout and
+      writes the ``n_buckets=`` layout of the new count. Counts double,
+      so each row is rewritten O(log size) times over the table's life.
+
+    After the write every other layout is deleted, which also finishes a
+    resize that a crash interrupted. A table that cannot be read raises
+    (see :func:`state_layouts`); its files are left in place.
     """
     snap_cols = [
         F.col("user_id"),
@@ -166,24 +222,32 @@ def upsert_latest_state(
         batch.filter(F.col("user_id").isNotNull())  # P3 (stream_processor.py:28-30)
         .filter(F.col("schema") == "tracking_v1")
         .select(*snap_cols)
-        .withColumn("bucket", state_bucket(F.col("user_id")))
     )
     if fresh.isEmpty():
         return
 
-    try:
-        existing = spark.read.parquet(state_dir)
-    except Exception:  # first batch: no table yet
-        existing = None
+    layouts = state_layouts(spark, state_dir)
+    current = max(layouts, default=0)
+    fs, _ = _hadoop_path(spark, state_dir)
+    size = fs.getContentSummary(layouts[current]).getLength() if layouts else 0
+    n = max(current, 1)
+    while size > n * STATE_BUCKET_BYTES:
+        n *= 2
+    fresh = fresh.withColumn("bucket", state_bucket(F.col("user_id"), n))
 
-    if existing is not None:
-        # Dynamic overwrite replaces each touched bucket whole, so every
-        # stored row of those buckets joins the merge, not only the
-        # touched users' rows. The buckets go in as a literal partition
-        # filter because Spark drops dynamic pruning at run time when
-        # the batch is cached, and foreachBatch caches it.
-        buckets = [r["bucket"] for r in fresh.select("bucket").distinct().collect()]
-        fresh = fresh.unionByName(existing.filter(F.col("bucket").isin(buckets)))
+    if layouts:
+        stored = spark.read.parquet(state_dir).filter(F.col("n_buckets") == current)
+        if n == current:
+            # Dynamic overwrite replaces each touched bucket whole, so
+            # every stored row of those buckets joins the merge, not only
+            # the touched users' rows. The buckets go in as a literal
+            # partition filter because Spark drops dynamic pruning at run
+            # time when the batch is cached, and foreachBatch caches it.
+            buckets = [r["bucket"] for r in fresh.select("bucket").distinct().collect()]
+            stored = stored.filter(F.col("bucket").isin(buckets))
+        else:
+            stored = stored.withColumn("bucket", state_bucket(F.col("user_id"), n))
+        fresh = fresh.unionByName(stored.drop("n_buckets"))
 
     merged = (
         fresh.repartition("bucket")
@@ -193,13 +257,20 @@ def upsert_latest_state(
                 F.struct("ts", "heart_rate", "steps", "calories"), F.col("ts")
             ).alias("s")
         )
-        .select("user_id", "s.ts", "s.heart_rate", "s.steps", "s.calories", "bucket")
+        .select(
+            "user_id", "s.ts", "s.heart_rate", "s.steps", "s.calories",
+            F.lit(n).alias("n_buckets"), "bucket",
+        )
     )
-
-    writer = merged.write.mode("overwrite").partitionBy("bucket")
-    if existing is not None:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.parquet(state_dir)
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("n_buckets", "bucket")
+        .parquet(state_dir)
+    )
+    for count, path in layouts.items():
+        if count != n:
+            fs.delete(path, True)
 
 
 def write_raw_batch(batch: DataFrame, batch_id: int, raw_dir: str) -> None:

@@ -21,6 +21,7 @@ from cognitive_score_bigdata_spark.ml.pipeline import score_requests
 from cognitive_score_bigdata_spark.streaming.pipeline import (
     enrich,
     read_event_stream,
+    state_layouts,
 )
 
 # form fields the model consumes that can arrive on the stream; the
@@ -44,7 +45,9 @@ def score_stream(
 ):
     """Score manual-entry events as they arrive; append to the scores
     table. State is re-read per micro-batch so scoring always sees the
-    newest wearable snapshot the hot path has written."""
+    newest wearable snapshot the hot path has written: the current layout
+    of the latest-state table, or no state while there is no table yet.
+    A table that is there but cannot be read fails the batch."""
     events = enrich(read_event_stream(spark, input_dir))
     requests = events.filter(
         (F.col("schema") == "manual_entry_v1")
@@ -62,9 +65,12 @@ def score_stream(
         if batch.isEmpty():
             return
         sess = batch.sparkSession
-        try:
-            state = sess.read.parquet(state_dir)
-        except Exception:
+        layouts = state_layouts(sess, state_dir)
+        if layouts:
+            state = sess.read.parquet(state_dir).filter(
+                F.col("n_buckets") == max(layouts)
+            )
+        else:
             state = sess.createDataFrame(
                 [],
                 "user_id string, heart_rate decimal(18,3), "

@@ -129,14 +129,15 @@ def test_streaming_scoring(spark, model, tmp_path):
     out_dir = str(tmp_path / "scores")
     os.makedirs(input_dir)
 
-    # pre-existing wearable state for u1 (as the hot path would write)
+    # pre-existing wearable state for u1, in the hot path's one-bucket
+    # layout (n_buckets=1/bucket=0)
     from decimal import Decimal
 
     spark.createDataFrame(
-        [("u1", Decimal("82.000"), Decimal("7000.000"), Decimal("1400.000"))],
+        [("u1", Decimal("82.000"), Decimal("7000.000"), Decimal("1400.000"), 1, 0)],
         "user_id string, heart_rate decimal(18,3), steps decimal(18,3), "
-        "calories decimal(18,3)",
-    ).write.parquet(state_dir)
+        "calories decimal(18,3), n_buckets int, bucket int",
+    ).write.partitionBy("n_buckets", "bucket").parquet(state_dir)
 
     events = [
         {  # scorable request

@@ -209,20 +209,17 @@ def test_worker_status_timestamp_tie_is_deterministic(spark):
         assert got["last_heart_rate"] == 90 and got["last_steps"] == 900
 
 
-def test_worker_status_prunes_to_the_users_bucket(spark, tmp_path):
+def test_worker_status_prunes_to_the_users_bucket(spark, tmp_path, monkeypatch):
     """Over the bucketed latest-state table the lookup scans only the
-    user's bucket, and returns the same payload as over the same rows
-    without the ``bucket`` column: for a present user, a user with null
-    readings and a missing user."""
+    user's bucket, without being told the bucket count, and returns the
+    same payload as over the same rows without the layout columns: for a
+    present user, a user with null readings and a missing user. The
+    table is grown to four buckets so that pruning has files to skip."""
+    import os
     import re
 
-    import pyspark.sql.functions as F
-
     from cognitive_score_bigdata_spark.serving import status_lookup, worker_status
-    from cognitive_score_bigdata_spark.streaming.pipeline import (
-        state_bucket,
-        upsert_latest_state,
-    )
+    from cognitive_score_bigdata_spark.streaming import pipeline
 
     ts = datetime.datetime(2024, 1, 1, 12, 0, 0)
     batch = spark.createDataFrame(
@@ -231,17 +228,26 @@ def test_worker_status_prunes_to_the_users_bucket(spark, tmp_path):
             ("u1", "tracking_v1", ts.replace(hour=14), 72, 4300, 6),
             ("u2", "tracking_v1", ts, None, None, None),
         ]
-        + [(f"u{i}", "tracking_v1", ts, 60 + i, i, 1) for i in range(3, 20)],
+        + [(f"u{i}", "tracking_v1", ts, 60 + i, i, 1) for i in range(3, 200)],
         "user_id string, schema string, ts timestamp, heart_rate int, "
         "steps int, calories int",
     )
     state_dir = str(tmp_path / "state")
-    upsert_latest_state(spark, batch, state_dir)
+    pipeline.upsert_latest_state(spark, batch, state_dir)
+    size = sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, names in os.walk(state_dir)
+        for f in names
+        if f.endswith(".parquet")
+    )
+    monkeypatch.setattr(pipeline, "STATE_BUCKET_BYTES", size // 3)
+    pipeline.upsert_latest_state(spark, batch, state_dir)  # replay, at 4 buckets
+    assert os.listdir(state_dir).count("n_buckets=4") == 1
     wearables = spark.read.parquet(state_dir).withColumnRenamed("ts", "timestamp")
 
     for uid in ("u1", "u2", "nobody"):
         assert worker_status(wearables, uid) == worker_status(
-            wearables.drop("bucket"), uid
+            wearables.drop("n_buckets", "bucket"), uid
         ), uid
     assert worker_status(wearables, "u1") == {
         "user_id": "u1",
@@ -251,10 +257,14 @@ def test_worker_status_prunes_to_the_users_bucket(spark, tmp_path):
     }
     assert worker_status(wearables, "u2")["last_heart_rate"] == 0
 
-    bucket = spark.range(1).select(state_bucket(F.lit("u1"))).first()[0]
-    plan = status_lookup(wearables, "u1")._jdf.queryExecution().executedPlan().toString()
-    (scan,) = [line for line in plan.splitlines() if "FileScan parquet" in line]
-    assert re.search(rf"PartitionFilters: \[[^\]]*\(bucket#\d+ = {bucket}\)", scan), scan
+    lookup = status_lookup(wearables, "u1")
+    assert lookup.collect()[0]["user_id"] == "u1"
+    leaves = lookup._jdf.queryExecution().executedPlan().collectLeaves()
+    (scan,) = [leaves.apply(i) for i in range(leaves.size())]
+    assert re.search(
+        r"PartitionFilters: \[[^\]]*\(bucket#\d+ = cast\(pmod\(", scan.toString()
+    ), scan.toString()
+    assert scan.metrics().apply("numFiles").value() == 1
 
 
 def test_session_scoped_cache_evicts_stale_appids():

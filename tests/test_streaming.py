@@ -6,11 +6,14 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
 import re
 
 import pyspark.sql.functions as F
 import pytest
+from py4j.protocol import Py4JJavaError
 
+from cognitive_score_bigdata_spark.streaming import pipeline
 from cognitive_score_bigdata_spark.streaming.pipeline import (
     EVENT_SCHEMA,
     enrich,
@@ -152,68 +155,219 @@ def _tracking_batch(spark, events):
     return enrich(spark.createDataFrame(events, schema=EVENT_SCHEMA))
 
 
-def _buckets_of(spark, users):
-    """Each user's bucket as a keyed reader computes it (from a literal)."""
+def _buckets_of(spark, users, n):
+    """Each user's bucket among ``n`` as a keyed reader computes it (from
+    a literal)."""
     row = spark.range(1).select(
-        *[state_bucket(F.lit(u)).alias(u) for u in users]
+        *[state_bucket(F.lit(u), n).alias(u) for u in users]
     ).first()
     return row.asDict()
 
 
-def _files_per_bucket(state_dir):
-    return {
-        d: len([f for f in os.listdir(os.path.join(state_dir, d)) if f.endswith(".parquet")])
-        for d in os.listdir(state_dir)
-        if d.startswith("bucket=")
-    }
+def _layout(state_dir):
+    """{bucket count: {bucket dir: parquet file count}} of a state table."""
+    out = {}
+    for layout in os.listdir(state_dir):
+        if layout.startswith("n_buckets="):
+            root = os.path.join(state_dir, layout)
+            out[int(layout.split("=")[1])] = {
+                d: len([f for f in os.listdir(os.path.join(root, d)) if f.endswith(".parquet")])
+                for d in os.listdir(root)
+                if d.startswith("bucket=")
+            }
+    return out
+
+
+def _parquet_bytes(state_dir):
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, names in os.walk(state_dir)
+        for f in names
+        if f.endswith(".parquet")
+    )
+
+
+def _statuses(spark, state_dir, users):
+    """worker_status over the table and over the same rows without the
+    layout columns, for each user."""
+    from cognitive_score_bigdata_spark.serving import worker_status
+
+    wearables = spark.read.parquet(state_dir).withColumnRenamed("ts", "timestamp")
+    flat = wearables.drop("n_buckets", "bucket")
+    return [(worker_status(wearables, u), worker_status(flat, u)) for u in users]
 
 
 def test_state_table_bucket_layout(spark, dirs):
-    """Every stored row sits in the bucket a reader computes for its key,
-    and each bucket directory holds one file, after the first write and
-    after a merge that rewrites some buckets. Partition coalescing is off
-    so the write runs in several tasks, as it does on real batch sizes."""
+    """A new table gets one bucket: ``n_buckets=1/bucket=0`` holds one
+    file after the first write and after a merge, and every stored row
+    carries the layout a reader computes for its key."""
     users = [f"user-{i}" for i in range(200)]
-    want = _buckets_of(spark, users)
+    upsert_latest_state(
+        spark,
+        _tracking_batch(spark, [_tracking(u, BASE_TS + i, hr=60 + i) for i, u in enumerate(users)]),
+        dirs["state"],
+    )
+    assert _layout(dirs["state"]) == {1: {"bucket=0": 1}}
+
+    upsert_latest_state(
+        spark,
+        _tracking_batch(spark, [_tracking(u, BASE_TS + 1000, hr=99) for u in users[:5]]),
+        dirs["state"],
+    )
+    assert _layout(dirs["state"]) == {1: {"bucket=0": 1}}
+    rows = spark.read.parquet(dirs["state"]).collect()
+    assert {r["user_id"]: (r["n_buckets"], r["bucket"]) for r in rows} == {
+        u: (1, 0) for u in users
+    }
+    assert sorted(float(r["heart_rate"]) for r in rows if r["user_id"] in users[:5]) == [99.0] * 5
+
+
+def test_state_table_doubles_its_buckets_as_it_grows(spark, dirs, monkeypatch):
+    """Once the table's bytes pass STATE_BUCKET_BYTES a bucket, the next
+    upsert rewrites it at twice the buckets: the old layout is gone, every
+    user is stored once, in the bucket a reader computes, one file per
+    bucket, and status reads agree with the unbucketed rows before and
+    after."""
+    users = [f"user-{i}" for i in range(200)]
+    probe = [users[0], users[1], users[150], "nobody"]
+    upsert_latest_state(
+        spark,
+        _tracking_batch(spark, [_tracking(u, BASE_TS + i, hr=60 + i) for i, u in enumerate(users)]),
+        dirs["state"],
+    )
+    for got, flat in _statuses(spark, dirs["state"], probe):
+        assert got == flat
+
+    # half the table's bytes fit a bucket: two buckets, not one or four
+    monkeypatch.setattr(pipeline, "STATE_BUCKET_BYTES", _parquet_bytes(dirs["state"]) * 3 // 4)
+    # partition coalescing off, so the write runs in several tasks, as it
+    # does on real batch sizes, and still makes one file per bucket
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     saved = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
         upsert_latest_state(
             spark,
-            _tracking_batch(spark, [_tracking(u, BASE_TS + i, hr=60 + i) for i, u in enumerate(users)]),
+            _tracking_batch(spark, [_tracking(u, BASE_TS + 1000, hr=99) for u in users[:2]]),
             dirs["state"],
         )
-        layout = _files_per_bucket(dirs["state"])
-        assert len(layout) == len(set(want.values()))
-        assert set(layout.values()) == {1}
-
-        upsert_latest_state(
-            spark,
-            _tracking_batch(spark, [_tracking(u, BASE_TS + 1000, hr=99) for u in users[:5]]),
-            dirs["state"],
-        )
-        assert set(_files_per_bucket(dirs["state"]).values()) == {1}
     finally:
         spark.conf.set(key, saved)
+
+    assert _layout(dirs["state"]) == {2: {"bucket=0": 1, "bucket=1": 1}}
     rows = spark.read.parquet(dirs["state"]).collect()
+    assert sorted(r["user_id"] for r in rows) == sorted(users)
+    want = _buckets_of(spark, users, 2)
     assert {r["user_id"]: r["bucket"] for r in rows} == want
-    assert sorted(float(r["heart_rate"]) for r in rows if r["user_id"] in users[:5]) == [99.0] * 5
+    statuses = _statuses(spark, dirs["state"], probe)
+    for got, flat in statuses:
+        assert got == flat
+    assert [s[0]["last_heart_rate"] for s in statuses] == [99, 99, 210, 0]
+
+
+def test_interrupted_resize_reads_right_and_heals(spark, dirs, monkeypatch, tmp_path):
+    """A crash between a resize's write and its delete leaves the old,
+    smaller layout beside the new one. Status reads still answer from
+    the newest row, and the next upsert merges from the larger layout
+    and leaves only one."""
+    import shutil
+
+    users = [f"user-{i}" for i in range(40)]
+    upsert_latest_state(
+        spark,
+        _tracking_batch(spark, [_tracking(u, BASE_TS + i, hr=60) for i, u in enumerate(users)]),
+        dirs["state"],
+    )
+    stale = str(tmp_path / "stale")
+    shutil.copytree(os.path.join(dirs["state"], "n_buckets=1"), stale)
+    monkeypatch.setattr(pipeline, "STATE_BUCKET_BYTES", _parquet_bytes(dirs["state"]) * 3 // 4)
+    upsert_latest_state(
+        spark,
+        _tracking_batch(spark, [_tracking(u, BASE_TS + 1000, hr=99) for u in users[:3]]),
+        dirs["state"],
+    )
+    shutil.copytree(stale, os.path.join(dirs["state"], "n_buckets=1"))
+    assert sorted(_layout(dirs["state"])) == [1, 2]
+
+    statuses = _statuses(spark, dirs["state"], users[:5] + ["nobody"])
+    for got, flat in statuses:
+        assert got == flat
+    assert [s[0]["last_heart_rate"] for s in statuses] == [99, 99, 99, 60, 60, 0]
+
+    upsert_latest_state(
+        spark,
+        _tracking_batch(spark, [_tracking(users[4], BASE_TS + 2000, hr=77)]),
+        dirs["state"],
+    )
+    assert len(_layout(dirs["state"])) == 1
+    rows = {r["user_id"]: r for r in spark.read.parquet(dirs["state"]).collect()}
+    assert sorted(rows) == sorted(users)
+    assert [float(rows[u]["heart_rate"]) for u in users[:5]] == [99.0, 99.0, 99.0, 60.0, 77.0]
+
+
+@pytest.mark.parametrize(
+    "damage, error",
+    [("unreadable_part", Py4JJavaError), ("bucket_only_layout", ValueError)],
+)
+def test_upsert_raises_on_a_table_it_cannot_read(spark, dirs, damage, error):
+    """Only an absent table is a new one. A table whose part file cannot
+    be read, or laid out as ``bucket=k/`` without ``n_buckets=``, makes
+    the upsert raise and leaves every file in place."""
+    import shutil
+
+    upsert_latest_state(
+        spark,
+        _tracking_batch(spark, [_tracking(f"user-{i}", BASE_TS + i, hr=60) for i in range(10)]),
+        dirs["state"],
+    )
+    if damage == "unreadable_part":
+        for root, _, names in os.walk(dirs["state"]):
+            for f in names:
+                if f.endswith(".parquet.crc"):
+                    os.remove(os.path.join(root, f))
+                elif f.endswith(".parquet"):
+                    with open(os.path.join(root, f), "wb") as fh:
+                        fh.write(b"not a parquet file")
+    else:
+        shutil.move(
+            os.path.join(dirs["state"], "n_buckets=1", "bucket=0"),
+            os.path.join(dirs["state"], "bucket=0"),
+        )
+        os.rmdir(os.path.join(dirs["state"], "n_buckets=1"))
+
+    def files():
+        return {
+            os.path.join(root, f): pathlib.Path(root, f).read_bytes()
+            for root, _, names in os.walk(dirs["state"])
+            for f in names
+            if not f.startswith(("_", "."))
+        }
+
+    before = files()
+    with pytest.raises(error):
+        upsert_latest_state(
+            spark,
+            _tracking_batch(spark, [_tracking("user-0", BASE_TS + 100, hr=99)]),
+            dirs["state"],
+        )
+    assert files() == before
 
 
 def test_upsert_merge_scans_only_touched_buckets(spark, dirs, monkeypatch):
-    """The second upsert reads the existing table through a partition
-    filter on the touched buckets, not the whole table. The batch is
-    cached, as foreachBatch caches it."""
+    """An upsert that keeps the bucket count reads the existing table
+    through a literal partition filter on the layout and the touched
+    buckets, not the whole table. The table is first grown to four
+    buckets; the batch is cached, as foreachBatch caches it."""
     from pyspark.sql import DataFrameWriter
 
     users = [f"user-{i}" for i in range(24)]
-    upsert_latest_state(
-        spark,
-        _tracking_batch(spark, [_tracking(u, BASE_TS + i, hr=60 + i) for i, u in enumerate(users)]),
-        dirs["state"],
-    )
-    buckets = _buckets_of(spark, users)
+    batch = _tracking_batch(spark, [_tracking(u, BASE_TS + i, hr=60 + i) for i, u in enumerate(users)])
+    upsert_latest_state(spark, batch, dirs["state"])
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "STATE_BUCKET_BYTES", _parquet_bytes(dirs["state"]) // 3)
+        upsert_latest_state(spark, batch, dirs["state"])  # replay, at 4 buckets
+    assert list(_layout(dirs["state"])) == [4]
+    buckets = _buckets_of(spark, users, 4)
     touched = [users[0]] + [u for u in users if buckets[u] != buckets[users[0]]][:1]
 
     plans = []
@@ -232,9 +386,14 @@ def test_upsert_merge_scans_only_touched_buckets(spark, dirs, monkeypatch):
         batch.unpersist()
 
     (scan,) = [line for line in plans[0].splitlines() if "FileScan parquet" in line]
-    pruned = re.search(r"PartitionFilters: \[bucket#\d+ IN \(([\d,]+)\)", scan)
+    pruned = re.search(
+        r"PartitionFilters: \[isnotnull\(n_buckets#\d+\), \(n_buckets#\d+ = 4\), "
+        r"bucket#\d+ IN \(([\d,]+)\)",
+        scan,
+    )
     assert pruned, scan
     assert {int(b) for b in pruned.group(1).split(",")} == {buckets[u] for u in touched}
+    assert list(_layout(dirs["state"])) == [4]
     state = {r["user_id"]: r for r in spark.read.parquet(dirs["state"]).collect()}
     assert set(state) == set(users)
     assert [float(state[u]["heart_rate"]) for u in touched] == [99.0, 99.0]
