@@ -77,16 +77,26 @@ PR_INIT = 1_000_000
 LOCAL_FINISH_BYTES = 32 * 1024 * 1024
 
 
+def count_rows(df: DataFrame) -> int:
+    """``df``'s row count, as one Spark job over ``df``'s own physical
+    plan. ``DataFrame.count()`` plans a global aggregate instead, which
+    adaptive execution runs as two jobs (a partial aggregate, then a
+    one-partition shuffle)."""
+    return df._jdf.queryExecution().toRdd().count()
+
+
 def collect_if_small(df: DataFrame, rows: int | None = None) -> pa.Table | None:
     """``df`` collected through Arrow when its rows take less than
     ``LOCAL_FINISH_BYTES``, else ``None`` (the caller's distributed path).
 
     ``rows`` is an upper bound on ``df``'s row count the caller already
-    has; without it the rows are counted here, so the size check and the
-    collect are two Spark jobs. The budget is read at call time: at 0
-    every caller takes its distributed path."""
+    has; without it the rows are counted here (:func:`count_rows`), so
+    the size check and the collect are two Spark jobs, and the collect
+    reuses the plan, with any shuffle output, that the count ran. The
+    budget is read at call time: at 0 every caller takes its
+    distributed path."""
     if rows is None:
-        rows = df.count()
+        rows = count_rows(df)
     if rows * 8 * len(df.columns) >= LOCAL_FINISH_BYTES:
         return None
     return df.toArrow()

@@ -9,9 +9,12 @@ socket, and the server is a throwaway thread wrapper around payloads the
 engine already assembles (:mod:`serving`, :mod:`ml.pipeline`).
 
 This is deliberately a DEV/parity edge, not a production server: real
-deployments put the scoring DataFrame behind a model server or push
-payloads to a cache — the engine's job ends at the payload contract,
-which is what the tests pin.
+deployments put the scoring DataFrame behind a model server — the
+engine's job ends at the payload contract, which is what the tests pin.
+The status route answers from an in-process index of the state
+snapshot (:func:`serving.worker_status`), so a status request runs no
+Spark job. A route that raises answers a JSON 500 rather than dropping
+the connection.
 """
 
 from __future__ import annotations
@@ -43,19 +46,31 @@ def make_handler(
             self.end_headers()
             self.wfile.write(body)
 
+        def _answer(self, fn, *args, not_found=()) -> None:
+            """200 with ``fn(*args)``; a JSON 404 when it raises one of
+            ``not_found``, a JSON 500 when it raises anything else."""
+            try:
+                payload = fn(*args)
+            except not_found as e:
+                self._send(404, {"detail": f"unknown {e}"})
+            except Exception as e:
+                self._send(500, {"detail": f"internal error: {type(e).__name__}"})
+            else:
+                self._send(200, payload)
+
         def do_GET(self):  # noqa: N802 (http.server API)
             if self.path == HEALTH_ROUTE:
                 # main.py:70-71 — load-balancer liveness probe
                 self._send(200, {"status": "healthy"})
                 return
-            if self.path == DASHBOARD_ROUTE:
-                self._send(200, stats_fn())
+            if self.path == DASHBOARD_ROUTE and stats_fn is not None:
+                self._answer(stats_fn)
                 return
             m = WORKER_STATUS_RE.match(self.path)
             if m and worker_status_fn is not None:
                 # main.py:73-81 — "Last Pulse"; missing user returns the
                 # default payload (not 404), matching the reference
-                self._send(200, worker_status_fn(m.group(1)))
+                self._answer(worker_status_fn, m.group(1))
                 return
             self._send(404, {"detail": "Not Found"})
 
@@ -69,10 +84,7 @@ def make_handler(
             except (ValueError, json.JSONDecodeError):
                 self._send(400, {"detail": "invalid JSON body"})
                 return
-            try:
-                self._send(200, predict_fn(req))
-            except KeyError as e:
-                self._send(404, {"detail": f"unknown {e}"})
+            self._answer(predict_fn, req, not_found=KeyError)
 
         def log_message(self, *args):  # silence test noise
             pass

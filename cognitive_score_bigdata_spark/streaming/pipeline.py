@@ -44,11 +44,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 # Bytes a latest-state bucket may hold before the table doubles its
-# bucket count. A status read scans one bucket, and a bucket this size
-# costs it little: on local[2] with C1 JIT only, worker_status over one
-# 14.2 MB bucket of 1M users took p50 134 ms (40 lookups), against
-# 120 ms over one 0.1 MB bucket of 5,000 users. Every further bucket adds
-# a file to each write and to each listing of the table.
+# bucket count. A snapshot within graph.LOCAL_FINISH_BYTES answers status
+# reads from serving's in-memory index and scans no bucket per read. Above
+# it, each status read runs a lookup job that scans one bucket, and a
+# bucket this size costs it little: on local[2] with C1 JIT only, that
+# lookup over one 14.2 MB bucket of 1M users took p50 134 ms (40
+# lookups), against 120 ms over one 0.1 MB bucket of 5,000 users. Every
+# further bucket adds a file to each write and to each listing of the
+# table.
 STATE_BUCKET_BYTES = 16 * 1024 * 1024
 
 # One stream, two shapes, discriminated by `schema` (FIXTURES.md §A4);

@@ -5,8 +5,10 @@ order-insensitive exact comparison)."""
 
 from __future__ import annotations
 
+import itertools
 import os
 import sys
+from contextlib import contextmanager
 
 import duckdb
 import numpy as np
@@ -45,6 +47,27 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     s = get_spark("csb-tests", master="local[4]", shuffle_partitions=4)
     yield s
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@contextmanager
+def jobs_started(spark):
+    """Tag the Spark jobs this thread starts inside with a fresh job
+    group; yields a list whose one item becomes their number on exit."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{next(_JOB_GROUPS)}"
+    started = [0]
+    sc.setJobGroup(group, group)
+    try:
+        yield started
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        # the status tracker learns of a job from the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        started[0] = len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -411,6 +411,21 @@ def test_min_propagate_overflow_raises(spark, min_path):
         sssp_fixed_rounds(es, 2).collect()
 
 
+def test_collect_if_small_counts_in_one_job(spark, tmp_path):
+    """The gate's size check is one job over the frame's own plan (not
+    the two a global-aggregate count takes under adaptive execution), and
+    the collect is one more: two jobs on a scan frame."""
+    from tests.conftest import jobs_started
+
+    path = str(tmp_path / "edges")
+    spark.range(500).selectExpr("id AS src", "id + 1 AS dst").write.parquet(path)
+    edges = spark.read.parquet(path)
+    with jobs_started(spark) as started:
+        table = graph.collect_if_small(edges)
+    assert table.num_rows == 500
+    assert started == [2]
+
+
 def test_skyline_matches_bruteforce(spark):
     """Skyline sweep vs brute-force dominance on a small set with ties
     on each coordinate and full-duplicate points (both must survive)."""

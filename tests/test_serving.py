@@ -5,8 +5,17 @@ timestamps, int truncation)."""
 from __future__ import annotations
 
 import datetime
+import os
+import shutil
+import threading
 
-from cognitive_score_bigdata_spark.serving import dashboard_stats
+import pytest
+
+from cognitive_score_bigdata_spark import serving
+from cognitive_score_bigdata_spark.operators import graph
+from cognitive_score_bigdata_spark.serving import dashboard_stats, worker_status
+from cognitive_score_bigdata_spark.streaming import pipeline
+from tests.conftest import jobs_started
 
 
 def test_dashboard_payload_contract(spark):
@@ -265,6 +274,259 @@ def test_worker_status_prunes_to_the_users_bucket(spark, tmp_path, monkeypatch):
         r"PartitionFilters: \[[^\]]*\(bucket#\d+ = cast\(pmod\(", scan.toString()
     ), scan.toString()
     assert scan.metrics().apply("numFiles").value() == 1
+
+
+def test_http_route_that_raises_answers_500(spark):
+    """A route callable that raises gets a JSON 500, not a dropped
+    connection; predict's KeyError stays a 404, and the server keeps
+    serving after either."""
+    import json
+    import urllib.error
+    import urllib.request
+
+    from cognitive_score_bigdata_spark.serving_http import ServingServer
+
+    def broken_status(uid):
+        raise RuntimeError("state table unreadable")
+
+    def predict(req):
+        if req["user_id"] == "ghost":
+            raise KeyError(req["user_id"])
+        raise ValueError("model not loaded")
+
+    def post(url, body):
+        return urllib.request.Request(
+            f"{url}/api/predict", data=json.dumps(body).encode()
+        )
+
+    with ServingServer(None, predict, broken_status) as url:
+        for req, want in [
+            (f"{url}/api/worker/u1/status", 500),
+            (post(url, {"user_id": "u1"}), 500),
+            (post(url, {"user_id": "ghost"}), 404),
+            (f"{url}/api/dashboard/stats", 404),  # no stats callable
+        ]:
+            with pytest.raises(urllib.error.HTTPError) as e:
+                urllib.request.urlopen(req)
+            assert e.value.code == want
+            assert "detail" in json.loads(e.value.read())
+        assert json.loads(urllib.request.urlopen(f"{url}/health").read()) == {
+            "status": "healthy"
+        }
+
+
+# -- both status paths: the per-snapshot index and the per-call lookup --
+
+
+@pytest.fixture(params=["index", "lookup"])
+def status_path(request, monkeypatch):
+    """Answer status reads from the per-snapshot index, or (with a zero
+    driver budget) with one bucket-pruned lookup job per call; each case
+    fails unless its own path answered."""
+    calls = []
+    lookup = serving.status_lookup
+    monkeypatch.setattr(
+        serving, "status_lookup", lambda *a: calls.append(a) or lookup(*a)
+    )
+    if request.param == "lookup":
+        monkeypatch.setattr(graph, "LOCAL_FINISH_BYTES", 0)
+    yield request.param
+    assert bool(calls) == (request.param == "lookup"), calls
+
+
+def _payload(uid, hr, steps, ts):
+    return {"user_id": uid, "last_heart_rate": hr, "last_steps": steps, "timestamp": ts}
+
+
+def _state_batch(spark, rows):
+    return spark.createDataFrame(
+        [(u, "tracking_v1", ts, hr, steps, 1) for u, ts, hr, steps in rows],
+        "user_id string, schema string, ts timestamp, heart_rate int, "
+        "steps int, calories int",
+    )
+
+
+def _read_state(spark, state_dir):
+    return spark.read.parquet(state_dir).withColumnRenamed("ts", "timestamp")
+
+
+def _parquet_bytes(state_dir):
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, names in os.walk(state_dir)
+        for f in names
+        if f.endswith(".parquet")
+    )
+
+
+TS = datetime.datetime(2024, 1, 1, 12, 0, 0)
+
+
+def test_status_paths_agree_on_a_bucketed_table(spark, tmp_path, monkeypatch, status_path):
+    """A 4-bucket table answers a present user, a user with null
+    readings and a missing user, the same as its rows without the
+    layout columns."""
+    rows = [
+        ("u1", TS, 61, 1000),
+        ("u1", TS.replace(hour=14), 72, 4300),
+        ("u2", TS, None, None),
+    ] + [(f"u{i}", TS, 60 + i, i) for i in range(3, 200)]
+    state_dir = str(tmp_path / "state")
+    pipeline.upsert_latest_state(spark, _state_batch(spark, rows), state_dir)
+    monkeypatch.setattr(pipeline, "STATE_BUCKET_BYTES", _parquet_bytes(state_dir) // 3)
+    pipeline.upsert_latest_state(spark, _state_batch(spark, rows), state_dir)
+    assert os.listdir(state_dir).count("n_buckets=4") == 1
+    wearables = _read_state(spark, state_dir)
+    flat = wearables.drop("n_buckets", "bucket")
+
+    want = {
+        "u1": _payload("u1", 72, 4300, "2024-01-01 14:00:00"),
+        "u2": _payload("u2", 0, 0, "2024-01-01 12:00:00"),
+        "u7": _payload("u7", 67, 7, "2024-01-01 12:00:00"),
+        "nobody": _payload("nobody", 0, 0, None),
+    }
+    for uid, payload in want.items():
+        assert worker_status(wearables, uid) == payload, uid
+        assert worker_status(flat, uid) == payload, uid
+
+
+def test_status_paths_agree_across_an_interrupted_resize(
+    spark, tmp_path, monkeypatch, status_path
+):
+    """With two ``n_buckets=`` layouts left by a crashed resize, each
+    user answers from their newest row in either layout."""
+    users = [f"user-{i}" for i in range(40)]
+    state_dir = str(tmp_path / "state")
+    pipeline.upsert_latest_state(
+        spark, _state_batch(spark, [(u, TS, 60, 100) for u in users]), state_dir
+    )
+    stale = str(tmp_path / "stale")
+    shutil.copytree(os.path.join(state_dir, "n_buckets=1"), stale)
+    monkeypatch.setattr(pipeline, "STATE_BUCKET_BYTES", _parquet_bytes(state_dir) * 3 // 4)
+    later = TS.replace(hour=13)
+    pipeline.upsert_latest_state(
+        spark, _state_batch(spark, [(u, later, 99, 200) for u in users[:3]]), state_dir
+    )
+    shutil.copytree(stale, os.path.join(state_dir, "n_buckets=1"))
+    assert sorted(os.listdir(state_dir)) == ["n_buckets=1", "n_buckets=2"]
+    wearables = _read_state(spark, state_dir)
+
+    for u in users[:3]:
+        assert worker_status(wearables, u) == _payload(u, 99, 200, "2024-01-01 13:00:00")
+    for u in users[3:6]:
+        assert worker_status(wearables, u) == _payload(u, 60, 100, "2024-01-01 12:00:00")
+    assert worker_status(wearables, "nobody") == _payload("nobody", 0, 0, None)
+
+
+def test_status_paths_break_timestamp_ties_alike(spark, status_path):
+    """Rows that tie on the timestamp resolve by heart rate, then steps,
+    on either path and whatever the partitioning."""
+    rows = [("u1", TS, hr, steps) for hr, steps in ((55, 1), (90, 7), (90, 9), (71, 3))]
+    for nparts in (1, 3):
+        wearables = spark.createDataFrame(
+            rows, "user_id string, timestamp timestamp, heart_rate int, steps int"
+        ).repartition(nparts)
+        assert worker_status(wearables, "u1") == _payload("u1", 90, 9, "2024-01-01 12:00:00")
+
+
+def test_status_paths_convert_microseconds_as_a_row_does(spark, status_path, monkeypatch):
+    """The payload's timestamp string is the one a collected Row gives,
+    to the microsecond, when the session time zone, the driver's local
+    time zone and UTC all differ."""
+    import time
+
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        with monkeypatch.context() as m:
+            m.setenv("TZ", "America/New_York")
+            time.tzset()
+            wearables = spark.sql(
+                "SELECT * FROM VALUES "
+                "('u1', TIMESTAMP'2024-01-01 14:00:00.123456', 72, 4300), "
+                "('u1', TIMESTAMP'2024-01-01 13:59:59.999999', 65, 2000), "
+                "('u2', TIMESTAMP'1969-12-31 23:59:59.000001', 50, 10) "
+                "AS t(user_id, timestamp, heart_rate, steps)"
+            )
+            for uid in ("u1", "u2"):
+                (row,) = (
+                    wearables.filter(f"user_id = '{uid}'")
+                    .orderBy(wearables.timestamp.desc())
+                    .limit(1)
+                    .collect()
+                )
+                got = worker_status(wearables, uid)
+                assert got["timestamp"] == str(row["timestamp"]), uid
+                assert got["timestamp"].endswith((".123456", ".000001")), got
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+        time.tzset()
+
+
+def test_status_snapshot_keeps_its_answer_after_an_upsert(spark, tmp_path):
+    """An indexed frame answers from the state it was built on; a fresh
+    read of the table sees the upsert."""
+    state_dir = str(tmp_path / "state")
+    pipeline.upsert_latest_state(spark, _state_batch(spark, [("u1", TS, 61, 1000)]), state_dir)
+    old = _read_state(spark, state_dir)
+    before = _payload("u1", 61, 1000, "2024-01-01 12:00:00")
+    assert worker_status(old, "u1") == before
+    pipeline.upsert_latest_state(
+        spark, _state_batch(spark, [("u1", TS.replace(hour=15), 80, 5000)]), state_dir
+    )
+    assert worker_status(old, "u1") == before
+    assert worker_status(_read_state(spark, state_dir), "u1") == _payload(
+        "u1", 80, 5000, "2024-01-01 15:00:00"
+    )
+
+
+def _wearables(spark, n_users=50):
+    return spark.createDataFrame(
+        [(f"u{i}", TS, 60 + i % 40, i) for i in range(n_users)],
+        "user_id string, timestamp timestamp, heart_rate int, steps int",
+    )
+
+
+def test_status_index_serves_without_jobs_and_builds_once(spark):
+    """Concurrent first calls on one frame start only one build's jobs,
+    and every later call starts none."""
+    with jobs_started(spark) as solo:
+        assert worker_status(_wearables(spark), "u3")["last_steps"] == 3
+    assert solo[0] > 0
+
+    wearables = _wearables(spark)
+    barrier = threading.Barrier(2)
+    started, got = {}, {}
+
+    def first_call(uid):
+        with jobs_started(spark) as n:
+            barrier.wait()
+            got[uid] = worker_status(wearables, uid)
+        started[uid] = n[0]
+
+    threads = [threading.Thread(target=first_call, args=(u,)) for u in ("u1", "u2")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert sum(started.values()) == solo[0], started
+    assert [got[u]["last_steps"] for u in ("u1", "u2")] == [1, 2]
+    with jobs_started(spark) as later:
+        for i in range(10):
+            assert worker_status(wearables, f"u{i}")["last_steps"] == i
+    assert later == [0]
+
+
+def test_status_lookup_runs_one_job_per_call_above_the_budget(spark, monkeypatch):
+    """At a zero driver budget the frame is counted once, then every
+    call runs one lookup job, as before the index."""
+    monkeypatch.setattr(graph, "LOCAL_FINISH_BYTES", 0)
+    wearables = _wearables(spark)
+    worker_status(wearables, "u0")
+    for i in range(1, 4):
+        with jobs_started(spark) as started:
+            assert worker_status(wearables, f"u{i}")["last_steps"] == i
+        assert started == [1]
 
 
 def test_session_scoped_cache_evicts_stale_appids():
